@@ -183,3 +183,18 @@ def test_pagerank_directed_sink_gets_ranked(spark):
          pagerank(edges, iters=3, symmetric=False).collect()}
     assert set(r) == {1, 2, 3}
     assert r[3] > r[1] == r[2]
+
+
+def test_null_ids_agree_on_driver_and_distributed_paths(spark, monkeypatch):
+    # a null id is no vertex: edges to it connect nothing, their non-null
+    # endpoints stay vertices — on the driver union-find AND the rounds
+    from weather_data_warehouse_aws_spark.operators import graph as G
+
+    edges = _edges(
+        spark, [(1, 2), (2, 3), (5, None), (None, 7), (None, None), (8, 9), (9, 1)]
+    )
+    expected = {1: 1, 2: 1, 3: 1, 5: 5, 7: 7, 8: 1, 9: 1}
+    driver = {r["node"]: r["component"] for r in connected_components(edges).collect()}
+    monkeypatch.setattr(G, "_DRIVER_MAX_EDGES", 0)
+    rounds = {r["node"]: r["component"] for r in connected_components(edges).collect()}
+    assert driver == rounds == expected

@@ -545,7 +545,7 @@ def test_crash_between_gold_commits_keeps_snapshot_coherent(
     )
 
     wh = warehouse_dir
-    run_pipeline(spark, bronze_dir, wh, effective_date=EFFECTIVE, now=NOW)
+    layers1 = run_pipeline(spark, bronze_dir, wh, effective_date=EFFECTIVE, now=NOW)
     gen1 = read_gold_snapshot(spark, wh)["versions"]
     dim1 = sorted(
         str(r) for r in read_gold_snapshot(spark, wh)["dim_location"].collect()
@@ -582,6 +582,9 @@ def test_crash_between_gold_commits_keeps_snapshot_coherent(
     snap = read_gold_snapshot(spark, wh)
     assert snap["versions"] == gen1
     assert sorted(str(r) for r in snap["dim_location"].collect()) == dim1
+    # the crashed run published nothing, so generation 1's recorded
+    # frames are still the ones served
+    assert all(snap[n] is layers1[n] for n in gen1)
 
     # a COMPLETED re-run publishes generation 2 atomically
     run_pipeline(
@@ -598,3 +601,199 @@ def test_crash_between_gold_commits_keeps_snapshot_coherent(
             snap2["versions"][name]
             == tx_snapshot(os.path.join(wh, *rel))["version"]
         )
+
+
+# ------------------------------------------------- published-generation reuse
+def _gen_paths(wh):
+    import os
+
+    from weather_data_warehouse_aws_spark.pipeline.run import SNAPSHOT_TABLES
+
+    return {n: os.path.join(wh, *rel) for n, rel in SNAPSHOT_TABLES.items()}
+
+
+def test_read_gold_snapshot_reuses_published_generation(
+    spark, bronze_dir, tmp_path_factory, monkeypatch
+):
+    """run_pipeline records the frames it read back at its committed
+    versions; while the manifest names that generation, every
+    read_gold_snapshot returns those frames (in a fresh dict) without
+    rebuilding a single table read. The next run_pipeline's generation
+    replaces it."""
+    from weather_data_warehouse_aws_spark.operators.txlog import tx_snapshot
+    from weather_data_warehouse_aws_spark.pipeline import run as run_mod
+    from weather_data_warehouse_aws_spark.pipeline.run import (
+        SNAPSHOT_TABLES,
+        read_gold_snapshot,
+    )
+
+    wh = str(tmp_path_factory.mktemp("wh_reuse"))
+    layers1 = run_pipeline(spark, bronze_dir, wh, effective_date=EFFECTIVE, now=NOW)
+
+    reads = {"n": 0}
+    real_read = run_mod.tx_read
+
+    def counting_read(*a, **kw):
+        reads["n"] += 1
+        return real_read(*a, **kw)
+
+    monkeypatch.setattr(run_mod, "tx_read", counting_read)
+    snap_a = read_gold_snapshot(spark, wh)
+    snap_b = read_gold_snapshot(spark, wh)
+    assert reads["n"] == 0
+    assert snap_a is not snap_b
+    assert set(snap_a) == {*SNAPSHOT_TABLES, "versions"}
+    for n in SNAPSHOT_TABLES:
+        assert snap_a[n] is layers1[n] and snap_b[n] is layers1[n]
+    snap_a["dim_location"] = None  # a caller's dict is its own
+    assert read_gold_snapshot(spark, wh)["dim_location"] is layers1["dim_location"]
+    monkeypatch.setattr(run_mod, "tx_read", real_read)
+
+    dim1 = sorted(str(r) for r in snap_b["dim_location"].collect())
+    layers2 = run_pipeline(
+        spark, bronze_dir, wh,
+        effective_date=EFFECTIVE + dt.timedelta(days=1),
+        now=NOW + dt.timedelta(days=1),
+    )
+    snap2 = read_gold_snapshot(spark, wh)
+    assert all(snap2["versions"][n] == snap_b["versions"][n] + 1 for n in SNAPSHOT_TABLES)
+    assert all(snap2[n] is layers2[n] for n in SNAPSHOT_TABLES)
+    assert snap2["versions"] == {
+        n: tx_snapshot(p)["version"] for n, p in _gen_paths(wh).items()
+    }
+    # the held generation-1 frames still read generation 1
+    assert sorted(str(r) for r in snap_b["dim_location"].collect()) == dim1
+
+
+def test_read_gold_snapshot_vacuumed_pinned_version_still_raises(
+    spark, bronze_dir, tmp_path_factory
+):
+    """Reusing the recorded frames still resolves every pinned version:
+    once a vacuum retires the published dim_date version, the snapshot
+    read fails loudly instead of handing out frames over deleted files."""
+    from weather_data_warehouse_aws_spark.operators.txlog import (
+        tx_overwrite,
+        tx_read,
+        tx_vacuum,
+    )
+    from weather_data_warehouse_aws_spark.pipeline.run import read_gold_snapshot
+
+    wh = str(tmp_path_factory.mktemp("wh_vacuum"))
+    run_pipeline(spark, bronze_dir, wh, effective_date=EFFECTIVE, now=NOW)
+    read_gold_snapshot(spark, wh)
+    dd_path = _gen_paths(wh)["dim_date"]
+    tx_overwrite(tx_read(spark, dd_path).limit(10), dd_path)
+    tx_vacuum(dd_path, retain_versions=1)
+    with pytest.raises(ValueError, match="vacuumed"):
+        read_gold_snapshot(spark, wh)
+
+
+def test_read_gold_snapshot_other_session_or_rebuilt_warehouse_reads_logs(
+    spark, bronze_dir, tmp_path_factory
+):
+    """The record is per SparkSession: a second session never receives
+    the first one's frames. A warehouse replaced by another at the SAME
+    version numbers is a different generation (its data files differ)
+    and is read from its logs."""
+    import shutil
+
+    from weather_data_warehouse_aws_spark.pipeline.run import (
+        SNAPSHOT_TABLES,
+        read_gold_snapshot,
+    )
+
+    wh = str(tmp_path_factory.mktemp("wh_session"))
+    layers = run_pipeline(spark, bronze_dir, wh, effective_date=EFFECTIVE, now=NOW)
+    other = spark.newSession()
+    snap = read_gold_snapshot(other, wh)
+    for n in SNAPSHOT_TABLES:
+        assert snap[n] is not layers[n]
+        assert snap[n].sparkSession is other
+    assert snap["dim_location"].count() == layers["dim_location"].count()
+    n_fact = layers["fact_forecast_accuracy"].count()
+
+    twin = str(tmp_path_factory.mktemp("wh_twin"))
+    run_pipeline(spark, bronze_dir, twin, effective_date=EFFECTIVE, now=NOW)
+    shutil.rmtree(wh)
+    shutil.copytree(twin, wh)
+    # the twin's run recorded ITS path; wh's record still names the
+    # deleted files under the same version numbers
+    rebuilt = read_gold_snapshot(spark, wh)
+    assert rebuilt["versions"] == snap["versions"]
+    assert all(rebuilt[n] is not layers[n] for n in SNAPSHOT_TABLES)
+    assert rebuilt["fact_forecast_accuracy"].count() == n_fact
+
+
+# --------------------------------------------- SCD2 through run_pipeline
+SHIFTED_CITY, SHIFTED_TZ = "Sydney", 39600  # AEST -> AEDT
+
+
+def _shift_offset(bronze, city=SHIFTED_CITY, tz=SHIFTED_TZ, *, on_or_after=None):
+    """Rewrite `city`'s timezone offset in the bronze current payloads
+    (optionally only from day `on_or_after`): a DST switch in the feed."""
+    import glob
+    import json
+    import os
+
+    pattern = os.path.join(bronze, "raw", "current", "**", "*.json")
+    for path in glob.glob(pattern, recursive=True):
+        with open(path, encoding="utf-8") as f:
+            payloads = json.load(f)
+        for p in payloads:
+            if p["city_name"] == city and (
+                on_or_after is None or p["extraction_timestamp"][:10] >= on_or_after
+            ):
+                p["timezone"] = tz
+        with open(path, "w", encoding="utf-8") as f:
+            json.dump(payloads, f)
+
+
+def test_run_pipeline_scd2_offset_change_expires_and_inserts(spark, tmp_path_factory):
+    """A city's tracked attribute changing between two loads (a DST
+    offset switch) expires its version 1 and inserts version 2. The
+    SCD2 updates come from the load's own batch, so the silver history
+    holding both offsets cannot trip the duplicate-key guard."""
+    from weather_data_warehouse_aws_spark.pipeline.run import read_gold_snapshot
+
+    day1 = str(tmp_path_factory.mktemp("bronze_tz1"))
+    day2 = str(tmp_path_factory.mktemp("bronze_tz2"))
+    generate_bronze(day1, start=dt.date(2024, 1, 1), days=1, seed=7)
+    generate_bronze(day2, start=dt.date(2024, 1, 2), days=1, seed=8)
+    _shift_offset(day2)
+    wh = str(tmp_path_factory.mktemp("wh_tz"))
+    run_pipeline(spark, day1, wh, effective_date=dt.date(2024, 1, 1),
+                 now=dt.datetime(2024, 1, 1, 7))
+    eff2 = dt.date(2024, 1, 2)
+    run_pipeline(spark, day2, wh, effective_date=eff2, now=dt.datetime(2024, 1, 2, 7))
+
+    dim = read_gold_snapshot(spark, wh)["dim_location"].collect()
+    rows = {r.version: r for r in dim if r.location_name == SHIFTED_CITY}
+    assert set(rows) == {1, 2}
+    assert not rows[1].is_current and rows[1].timezone_offset_seconds == 36000
+    assert str(rows[1].effective_to_date) == str(eff2)
+    assert rows[2].is_current and rows[2].timezone_offset_seconds == SHIFTED_TZ
+    assert str(rows[2].effective_from_date) == str(eff2)
+    current = [r for r in dim if r.is_current]
+    assert len(current) == len(CITIES)
+    assert len({(r.location_name, r.country_code) for r in current}) == len(CITIES)
+    assert len(dim) == len(CITIES) + 1
+
+
+def test_run_pipeline_from_scratch_history_with_both_offsets(spark, tmp_path_factory):
+    """An initial load over a history in which one city's offset changed
+    yields ONE current row per natural key, carrying the latest offset."""
+    from weather_data_warehouse_aws_spark.pipeline.run import read_gold_snapshot
+
+    bronze = str(tmp_path_factory.mktemp("bronze_tz_hist"))
+    generate_bronze(bronze, start=dt.date(2024, 1, 1), days=2, seed=7)
+    _shift_offset(bronze, on_or_after="2024-01-02")
+    wh = str(tmp_path_factory.mktemp("wh_tz_hist"))
+    run_pipeline(spark, bronze, wh, effective_date=dt.date(2024, 1, 2),
+                 now=dt.datetime(2024, 1, 2, 7))
+
+    dim = read_gold_snapshot(spark, wh)["dim_location"].collect()
+    assert len(dim) == len(CITIES)
+    assert all(r.is_current and r.version == 1 for r in dim)
+    assert len({(r.location_name, r.country_code) for r in dim}) == len(CITIES)
+    (sydney,) = [r for r in dim if r.location_name == SHIFTED_CITY]
+    assert sydney.timezone_offset_seconds == SHIFTED_TZ

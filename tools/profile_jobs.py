@@ -5,7 +5,7 @@ count — the measurement tool behind the job-count claims in
 OPTIMIZATION_r*.md (guide §1: measure first; at sf0.1 the suite is
 job-overhead-bound, so job COUNTS are the load-independent evidence).
 
-Usage: python tools/profile_jobs.py <query> [iters]
+Usage: python tools/profile_jobs.py <query> [iters]   (iters >= 1, default 2)
 The first iteration warms codegen/broadcast caches; jobs are counted on
 the LAST iteration only (group boundaries via job-group tags).
 """
@@ -16,6 +16,7 @@ import json
 import os
 import sys
 import time
+import urllib.parse
 import urllib.request
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -26,36 +27,21 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 def main() -> None:
     name = sys.argv[1]
     iters = int(sys.argv[2]) if len(sys.argv) > 2 else 2
+    if iters < 1:
+        sys.exit("profile_jobs: iters must be >= 1")
 
     os.environ.setdefault("SPARK_GRAFT_CPUS", "32")
     from pyspark.sql import SparkSession
 
-    from weather_data_warehouse_aws_spark.session import get_spark
+    from weather_data_warehouse_aws_spark.session import engine_conf, ensure_session_conf
 
-    # same confs as get_spark, but with the UI on for the REST job dump
-    cpus = os.environ["SPARK_GRAFT_CPUS"]
-    spark = (
-        SparkSession.builder.appName("wdwa-profile")
-        .master(f"local[{cpus}]")
-        .config("spark.ui.enabled", "true")
-        .config("spark.ui.port", "4099")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-                "false")
-        .config(
-            "spark.sql.adaptive.advisoryPartitionSizeInBytes",
-            os.environ.get("SPARK_GRAFT_ADVISORY_PART", "64m"),
-        )
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory",
-                os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
-        .getOrCreate()
-    )
-    from weather_data_warehouse_aws_spark.session import ensure_session_conf
-
+    # get_spark's engine defaults (so profiles match what it runs), with
+    # the UI on for the REST job dump, bound to any free port
+    builder = SparkSession.builder.appName("wdwa-profile")
+    conf = {**engine_conf(), "spark.ui.enabled": "true", "spark.ui.port": "0"}
+    for key, value in conf.items():
+        builder = builder.config(key, value)
+    spark = builder.getOrCreate()
     ensure_session_conf(spark)
     spark.sparkContext.setLogLevel("ERROR")
 
@@ -74,7 +60,8 @@ def main() -> None:
     print(f"# {name}: last iter {t_last:.3f}s ({n} rows)", file=sys.stderr)
 
     app_id = spark.sparkContext.applicationId
-    url = f"http://localhost:4099/api/v1/applications/{app_id}/jobs?status=succeeded"
+    port = urllib.parse.urlparse(spark.sparkContext.uiWebUrl).port
+    url = f"http://localhost:{port}/api/v1/applications/{app_id}/jobs?status=succeeded"
     jobs = json.loads(urllib.request.urlopen(url).read())
     last = [j for j in jobs if j.get("jobGroup") == f"iter{iters - 1}"]
     last.sort(key=lambda j: j["jobId"])

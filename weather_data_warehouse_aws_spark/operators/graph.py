@@ -107,6 +107,8 @@ def _driver_components(spark, sym_rows, node_type) -> DataFrame:
         a, b = row[0], row[1]
         if a not in parent:
             parent[a] = a
+        if b is None:  # a null neighbour connects nothing (see caller)
+            continue
         if b not in parent:
             parent[b] = b
         ra, rb = find(a), find(b)
@@ -137,7 +139,8 @@ def connected_components(
     max_iter: int = 25,
 ) -> DataFrame:
     """(node, component) for every vertex of `edges`; component = min
-    reachable vertex id. Vertices must be non-null integral/comparable ids.
+    reachable vertex id. Vertices are integral/comparable ids; a null id
+    is dropped (its edges connect nothing), on both execution paths.
 
     Raises RuntimeError if the fixpoint is not reached in `max_iter`
     rounds (rounds needed = graph diameter; 25 covers any plausible dedup
@@ -146,6 +149,10 @@ def connected_components(
     sym = (
         edges.select(F.col(src).alias("node"), F.col(dst).alias("nbr"))
         .unionByName(edges.select(F.col(dst).alias("node"), F.col(src).alias("nbr")))
+        # a null id is no vertex: an edge to it connects nothing, and its
+        # non-null endpoint stays a vertex (the rounds' join never matches
+        # a null nbr; the driver's union-find skips it)
+        .filter(F.col("node").isNotNull())
         .distinct()
     )
     # lazy truncate: the sizing count right below is the materializing

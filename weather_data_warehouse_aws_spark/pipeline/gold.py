@@ -39,18 +39,25 @@ def timezone_name_col(offset_col: str = "timezone_offset_seconds"):
 
 
 def distinct_locations(silver_current: DataFrame) -> DataFrame:
-    """Unique location tuples + timezone name (`build_dimensions.py:30-48`)."""
-    return (
-        silver_current.select(
-            "location_name",
-            "country_code",
-            "latitude",
-            "longitude",
-            "timezone_offset_seconds",
+    """Unique location tuples + timezone name (`build_dimensions.py:30-48`).
+
+    Observation rows (those carrying `observation_time`) yield ONE row per
+    natural key: its latest observation's attributes. A key whose tracked
+    attributes changed inside the input (a timezone offset across a DST
+    switch) would otherwise yield two rows — two current dim rows on an
+    initial load, and a duplicate-key failure in `scd2_merge`. Inputs
+    without `observation_time` are attribute snapshots, kept as given."""
+    attrs = ["latitude", "longitude", "timezone_offset_seconds"]
+    if "observation_time" in silver_current.columns:
+        # max over a struct led by the time: the latest observation, ties
+        # broken on the attributes so the pick is deterministic
+        latest = F.max(F.struct("observation_time", *attrs)).alias("latest")
+        locations = silver_current.groupBy(*LOCATION_NATURAL_KEY).agg(latest).select(
+            *LOCATION_NATURAL_KEY, *[F.col(f"latest.{a}").alias(a) for a in attrs]
         )
-        .distinct()
-        .withColumn("timezone_name", timezone_name_col())
-    )
+    else:
+        locations = silver_current.select(*LOCATION_NATURAL_KEY, *attrs).distinct()
+    return locations.withColumn("timezone_name", timezone_name_col())
 
 
 def build_dim_location(

@@ -25,6 +25,13 @@ POSIX, per-key atomic PUT on an object store) recording every table's
 committed version AFTER the last commit, and `read_gold_snapshot` pins
 all reads `as_of` those versions — one coherent generation, always, on
 whatever storage the tables live on.
+
+Generation reuse: `run_pipeline` reads each table back at the exact
+version it committed and records those frames, per SparkSession and
+warehouse, as the published generation. While the manifest still names
+that generation, `read_gold_snapshot` hands out the recorded frames
+instead of rebuilding five file-list relations per call — a dashboard's
+panels all read one generation between loads.
 """
 
 from __future__ import annotations
@@ -32,11 +39,19 @@ from __future__ import annotations
 import datetime as _dt
 import json
 import os
+import weakref
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.txlog import get_data_store, tx_exists, tx_overwrite, tx_read
+from ..operators.txlog import (
+    get_data_store,
+    tx_exists,
+    tx_overwrite,
+    tx_read,
+    tx_snapshot,
+)
 from ..session import ensure_session_conf
 from .gold import build_dim_date, build_dim_location
 from .silver import build_silver_current, build_silver_forecast, read_bronze, write_silver_tx
@@ -55,8 +70,8 @@ def run_pipeline(
     """Run bronze→silver→gold→views; returns all layer DataFrames."""
     ensure_session_conf(spark)
 
-    silver_current = build_silver_current(read_bronze(spark, bronze_dir, "current"))
-    silver_forecast = build_silver_forecast(read_bronze(spark, bronze_dir, "forecast"))
+    batch_current = build_silver_current(read_bronze(spark, bronze_dir, "current"))
+    batch_forecast = build_silver_forecast(read_bronze(spark, bronze_dir, "forecast"))
 
     cur_path = os.path.join(warehouse_dir, "silver", "current_weather")
     fc_path = os.path.join(warehouse_dir, "silver", "forecast_weather")
@@ -65,13 +80,15 @@ def run_pipeline(
     # previous version live (see write_silver_tx)
     versions: dict[str, int] = {}
     versions["silver_current"] = write_silver_tx(
-        silver_current, cur_path, "observation_date"
+        batch_current, cur_path, "observation_date"
     )["version"]
     versions["silver_forecast"] = write_silver_tx(
-        silver_forecast, fc_path, "forecast_created_date"
+        batch_forecast, fc_path, "forecast_created_date"
     )["version"]
-    silver_current = tx_read(spark, cur_path)
-    silver_forecast = tx_read(spark, fc_path)
+    # read back at the versions THIS run committed, never "latest": the
+    # frames become the published generation (see _record_generation)
+    silver_current = tx_read(spark, cur_path, version=versions["silver_current"])
+    silver_forecast = tx_read(spark, fc_path, version=versions["silver_forecast"])
 
     dim_location_path = os.path.join(warehouse_dir, "gold", "dim_location")
     # no-log-yet → first run → initial load (reference build_dimensions.py:
@@ -83,16 +100,20 @@ def run_pipeline(
     existing = (
         tx_read(spark, dim_location_path) if tx_exists(dim_location_path) else None
     )
+    # the SCD2 updates are THIS batch's locations (latest observation per
+    # key, see distinct_locations) — the whole silver history would carry
+    # every past attribute value of a key and trip scd2_merge's
+    # duplicate-key guard on the first tracked change
     dim_location = build_dim_location(
-        silver_current, existing, effective_date=effective_date, now=now
+        batch_current, existing, effective_date=effective_date, now=now
     )
     versions["dim_location"] = tx_overwrite(dim_location, dim_location_path)
-    dim_location = tx_read(spark, dim_location_path)
+    dim_location = tx_read(spark, dim_location_path, version=versions["dim_location"])
 
     dim_date = build_dim_date(spark, *dim_date_range)
     dim_date_path = os.path.join(warehouse_dir, "gold", "dim_date")
     versions["dim_date"] = tx_overwrite(dim_date, dim_date_path)
-    dim_date = tx_read(spark, dim_date_path)
+    dim_date = tx_read(spark, dim_date_path, version=versions["dim_date"])
 
     facts = register_fact_views(spark, silver_current, silver_forecast, dim_location, dim_date)
     # materialize the accuracy fact — the reference recomputes its band join
@@ -112,22 +133,25 @@ def run_pipeline(
         acc_path,
         partition_by=["forecast_for_date"],
     )
-    facts["fact_forecast_accuracy"] = tx_read(spark, acc_path)
+    facts["fact_forecast_accuracy"] = tx_read(
+        spark, acc_path, version=versions["fact_forecast_accuracy"]
+    )
     facts["fact_forecast_accuracy"].createOrReplaceTempView("fact_forecast_accuracy")
 
     # publish the generation: THIS run's committed versions (never
     # re-read from the logs — a concurrent run's later commit would leak
     # in as a mixed generation), swapped in atomically AFTER the last
     # commit — read_gold_snapshot pins to this
-    _publish_snapshot_manifest(warehouse_dir, versions)
-
-    return {
+    published = _publish_snapshot_manifest(warehouse_dir, versions)
+    layers = {
         "silver_current": silver_current,
         "silver_forecast": silver_forecast,
         "dim_location": dim_location,
         "dim_date": dim_date,
         **facts,
     }
+    _record_generation(spark, warehouse_dir, published, layers)
+    return layers
 
 
 SNAPSHOT_TABLES = {
@@ -166,6 +190,51 @@ def _publish_snapshot_manifest(
     return versions
 
 
+class _Generation(NamedTuple):
+    versions: dict[str, int]
+    files: dict[str, int]  # table -> hash of its live file list at that version
+    frames: dict[str, DataFrame]
+
+
+# Per-session record of the generation each warehouse last published
+# from this process: {warehouse key: _Generation}, latest only. Same idiom
+# as sources/tables.py::_PLAN_CACHE — the frames are immutable plans
+# pinned to exact versions, and NO data is cached (every action still
+# scans the files). WeakKey so a retired session's entries die with it.
+_GENERATIONS: "weakref.WeakKeyDictionary[SparkSession, dict[str, _Generation]]" = (
+    weakref.WeakKeyDictionary()
+)
+
+
+def _warehouse_key(warehouse_dir: str) -> str:
+    return warehouse_dir if "://" in warehouse_dir else os.path.abspath(warehouse_dir)
+
+
+def _table_path(warehouse_dir: str, name: str) -> str:
+    return os.path.join(warehouse_dir, *SNAPSHOT_TABLES[name])
+
+
+def _files_id(warehouse_dir: str, name: str, version: int) -> int:
+    """Identity of one table version's live file set. Data file names are
+    unique, so a warehouse deleted and rebuilt to the same version numbers
+    reads as a different generation. Resolving the snapshot also applies
+    the vacuum-horizon check: a vacuumed version raises here."""
+    return hash(tuple(tx_snapshot(_table_path(warehouse_dir, name), version)["files"]))
+
+
+def _record_generation(
+    spark: SparkSession,
+    warehouse_dir: str,
+    versions: dict[str, int],
+    layers: dict[str, DataFrame],
+) -> None:
+    _GENERATIONS.setdefault(spark, {})[_warehouse_key(warehouse_dir)] = _Generation(
+        versions=dict(versions),
+        files={n: _files_id(warehouse_dir, n, v) for n, v in versions.items()},
+        frames={n: layers[n] for n in versions},
+    )
+
+
 def read_gold_snapshot(
     spark: SparkSession, warehouse_dir: str
 ) -> dict[str, DataFrame]:
@@ -175,17 +244,25 @@ def read_gold_snapshot(
     concurrent refresh can never join the new `dim_location` to the
     pre-refresh fact (or vice versa) — the mixed-generation anomaly that
     separate per-table logs (and the reference's separate Glue jobs)
-    otherwise allow. Returns the tables plus a `"versions"` dict entry."""
+    otherwise allow. Returns the tables plus a `"versions"` dict entry.
+
+    The manifest is read on every call. While it names the generation
+    this session's last `run_pipeline` on the warehouse recorded, the
+    recorded frames are returned (after each table's snapshot is resolved
+    again, so a vacuumed version still raises); any other generation, or
+    another session, reads every table from its log."""
     root = _manifest_root(warehouse_dir)
     with get_data_store(root).open_input(root, _SNAPSHOT_REL) as fh:
         versions: dict[str, int] = json.load(fh)
-    out: dict = {
-        name: tx_read(
-            spark,
-            os.path.join(warehouse_dir, *SNAPSHOT_TABLES[name]),
-            version=v,
-        )
-        for name, v in versions.items()
-    }
+    gen = _GENERATIONS.get(spark, {}).get(_warehouse_key(warehouse_dir))
+    if gen is not None and gen.versions == versions and all(
+        _files_id(warehouse_dir, n, v) == gen.files[n] for n, v in versions.items()
+    ):
+        out: dict = dict(gen.frames)
+    else:
+        out = {
+            name: tx_read(spark, _table_path(warehouse_dir, name), version=v)
+            for name, v in versions.items()
+        }
     out["versions"] = versions
     return out

@@ -65,6 +65,10 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # rewrite (file replaced) or a directory add/remove (dir mtime bumps)
     # miss the cache instead of silently reading old metadata; one stat()
     # per call is noise next to the ~0.1s reader construction it saves.
+    # Not covered: for a directory table, rewriting a part file IN PLACE
+    # (same name, opened for write) changes neither the directory's mtime
+    # nor its size, so the cached reader keeps the old footer/listing —
+    # regenerate by writing new files (or a new directory), not in place.
     try:
         st = os.stat(path)
         key = (path, st.st_mtime_ns, st.st_size)
