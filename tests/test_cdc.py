@@ -95,73 +95,6 @@ def test_apply_agg_delta_zero_delta_groups_untouched(spark):
     assert sorted(maintained.collect()) == sorted(prior.collect())
 
 
-def test_streaming_incremental_agg_matches_recompute(spark, tmp_path_factory):
-    """Changefeed slices applied per micro-batch: the maintained aggregate
-    after draining the stream equals a full recompute over the final
-    snapshot, and a re-run against the same checkpoint is a no-op."""
-    import time
-
-    from weather_data_warehouse_aws_spark.streaming.jobs import (
-        read_current_agg,
-        run_incremental_agg_foreachbatch,
-    )
-
-    feed = str(tmp_path_factory.mktemp("cdc_feed"))
-    aggd = str(tmp_path_factory.mktemp("cdc_agg")) + "/agg"
-    ckpt = str(tmp_path_factory.mktemp("cdc_ckpt"))
-
-    s0, s1 = _frames(spark)
-    s2 = s1.filter(F.col("k") != 2).unionByName(  # delete 2
-        spark.createDataFrame(
-            [(7, "b", 70, None)], "k int, grp string, amt int, note string"
-        )  # resurrect group b
-    )
-    # ordered changefeed: one file per diff slice -> one micro-batch each
-    snapshot_diff(s0, s1, ["k"]).coalesce(1).write.parquet(f"{feed}/d1")
-    time.sleep(1.1)  # file-source ordering is by modification time
-    snapshot_diff(s1, s2, ["k"]).coalesce(1).write.parquet(f"{feed}/d2")
-
-    diff_schema = snapshot_diff(s0, s1, ["k"]).schema
-    stream = (
-        spark.readStream.schema(diff_schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("recursiveFileLookup", "true")
-        .parquet(feed)
-    )
-    run_incremental_agg_foreachbatch(
-        stream, aggd, ckpt, ["grp"], ["amt"],
-        initial_agg=grouped_sums(s0, ["grp"], ["amt"]),
-    )
-
-    maintained = read_current_agg(spark, aggd)
-    direct = grouped_sums(s2, ["grp"], ["amt"])
-    assert sorted(map(tuple, maintained.collect())) == sorted(
-        map(tuple, direct.collect())
-    )
-
-    # drained checkpoint: a re-run sees no new files and changes nothing
-    stream2 = (
-        spark.readStream.schema(diff_schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("recursiveFileLookup", "true")
-        .parquet(feed)
-    )
-    run_incremental_agg_foreachbatch(
-        stream2, aggd, ckpt, ["grp"], ["amt"],
-        initial_agg=grouped_sums(s0, ["grp"], ["amt"]),
-    )
-    assert sorted(map(tuple, read_current_agg(spark, aggd).collect())) == sorted(
-        map(tuple, direct.collect())
-    )
-
-    # retention: versions older than (current, retry-safety prior) are GCd
-    import glob
-    import os
-
-    versions = glob.glob(os.path.join(aggd, "v=*"))
-    assert 1 <= len(versions) <= 2, versions
-
-
 def test_snapshot_diff_rejects_colliding_output_names(spark):
     old, new = _frames(spark)
     renamed_old = old.withColumnRenamed("note", "old_amt")
@@ -238,10 +171,10 @@ def test_apply_join_delta_missing_image_raises(spark):
 
 
 def test_streaming_incremental_agg_tx_state_store(spark, tmp_path_factory):
-    """state_format='tx': the maintained aggregate is a transaction-log
-    table — same final state as the versioned-dir protocol, exactly-once
-    under checkpoint re-run, readable through the same read_current_agg,
-    and time-travelable to the previous batch's state."""
+    """Changefeed slices applied per micro-batch into a transaction-log
+    state table: the maintained aggregate equals a full recompute over the
+    final snapshot, a re-run against the drained checkpoint commits
+    nothing, and the previous batch's state stays time-travelable."""
     import time
 
     from weather_data_warehouse_aws_spark.operators.txlog import (
@@ -281,7 +214,6 @@ def test_streaming_incremental_agg_tx_state_store(spark, tmp_path_factory):
     run_incremental_agg_foreachbatch(
         _stream(), aggd, ckpt, ["grp"], ["amt"],
         initial_agg=grouped_sums(s0, ["grp"], ["amt"]),
-        state_format="tx",
     )
     direct = grouped_sums(s2, ["grp"], ["amt"])
     assert sorted(map(tuple, read_current_agg(spark, aggd).collect())) == sorted(
@@ -298,7 +230,6 @@ def test_streaming_incremental_agg_tx_state_store(spark, tmp_path_factory):
     run_incremental_agg_foreachbatch(
         _stream(), aggd, ckpt, ["grp"], ["amt"],
         initial_agg=grouped_sums(s0, ["grp"], ["amt"]),
-        state_format="tx",
     )
     assert tx_snapshot(aggd)["version"] == v_before
 

@@ -12,7 +12,7 @@ from weather_data_warehouse_aws_spark.pipeline.generate import generate_bronze
 from weather_data_warehouse_aws_spark.pipeline.gold import build_dim_date, build_dim_location
 from weather_data_warehouse_aws_spark.pipeline.incremental import (
     affected_forecast_dates,
-    rebuild_accuracy_partitions,
+    rebuild_accuracy_tx,
 )
 from weather_data_warehouse_aws_spark.pipeline.silver import (
     build_silver_current,
@@ -44,43 +44,26 @@ def test_affected_date_math():
     assert dt.date(2024, 1, 10) in got
 
 
-def test_incremental_equals_full_rebuild(spark, tmp_path_factory):
-    bronze = str(tmp_path_factory.mktemp("bronze_inc"))
-    acc_path = str(tmp_path_factory.mktemp("acc_inc")) + "/fact"
-
-    def facts(days):
-        generate_bronze(
-            bronze, start=dt.date(2024, 1, 1), days=days, extractions_per_day=2, seed=5
-        ) if days else None
-        sc = build_silver_current(read_bronze(spark, bronze, "current"))
-        sf = build_silver_forecast(read_bronze(spark, bronze, "forecast"))
-        dl = build_dim_location(sc, effective_date=dt.date(2024, 1, 1))
-        dd = build_dim_date(spark)
-        return fact_weather_forecast(sf, dl, dd), fact_weather_actual(sc, dl, dd)
-
-    # initial load: 3 days, full build via the incremental writer
-    f, a = facts(3)
-    rebuild_accuracy_partitions(
-        spark, f, a, acc_path,
-        [dt.date(2024, 1, 1) + dt.timedelta(days=i) for i in range(3)],
+def test_rebuild_accuracy_tx_no_changed_dates_commits_nothing(spark, tmp_path_factory):
+    """An empty change set has no affected dates: the rebuild returns []
+    and leaves the table at its version (no empty commit, no crash on an
+    empty date envelope)."""
+    from weather_data_warehouse_aws_spark.operators.txlog import (
+        tx_overwrite,
+        tx_snapshot,
     )
-    n_initial = spark.read.parquet(acc_path).count()
-    assert n_initial > 0
 
-    # a new day lands → incremental rebuild of only its affected partitions
-    generate_bronze(
-        bronze, start=dt.date(2024, 1, 4), days=1, extractions_per_day=2, seed=6
+    acc_t = str(tmp_path_factory.mktemp("acc_noop")) + "/fact"
+    tx_overwrite(
+        spark.createDataFrame([(dt.date(2024, 1, 1), 1.0)],
+                              "forecast_for_date date, err double"),
+        acc_t,
     )
-    f2, a2 = facts(0)
-    targets = rebuild_accuracy_partitions(spark, f2, a2, acc_path, [dt.date(2024, 1, 4)])
-    assert dt.date(2024, 1, 4) in targets and dt.date(2024, 1, 9) in targets
-
-    incremental = spark.read.parquet(acc_path)
-    full = fact_forecast_accuracy(f2, a2)
-    inc_rows = sorted(str(tuple(r[c] for c in STABLE_COLS)) for r in incremental.select(STABLE_COLS).collect())
-    full_rows = sorted(str(tuple(r[c] for c in STABLE_COLS)) for r in full.select(STABLE_COLS).collect())
-    assert inc_rows == full_rows
-    assert incremental.count() > n_initial
+    v = tx_snapshot(acc_t)["version"]
+    # the fact inputs are never read when nothing changed
+    empty = spark.createDataFrame([], "forecast_for_time timestamp")
+    assert rebuild_accuracy_tx(spark, empty, empty, acc_t, []) == []
+    assert tx_snapshot(acc_t)["version"] == v
 
 
 def test_incremental_tx_equals_full_and_empties_dead_dates(spark, tmp_path_factory):
@@ -93,10 +76,6 @@ def test_incremental_tx_equals_full_and_empties_dead_dates(spark, tmp_path_facto
         tx_replace_where,
         tx_snapshot,
     )
-    from weather_data_warehouse_aws_spark.pipeline.incremental import (
-        rebuild_accuracy_tx,
-    )
-
     bronze = str(tmp_path_factory.mktemp("bronze_txinc"))
     acc_t = str(tmp_path_factory.mktemp("acc_txinc")) + "/fact"
 

@@ -120,59 +120,65 @@ def test_merge_plan_single_join(spark):
 
 
 def test_merge_into_table_partition_pruned(spark, tmp_path_factory):
-    """Table-level merge: only source-touched partitions rewrite; untouched
-    partition FILES survive byte-identical (proof the rewrite pruned)."""
-    import glob
+    """Table-level merge (`tx_merge` into a partitioned log table): only
+    files holding a matched key rewrite; untouched partition FILES stay
+    live byte-identical (proof the rewrite pruned)."""
     import os
 
-    from weather_data_warehouse_aws_spark.operators.merge import merge_into_table
+    from weather_data_warehouse_aws_spark.operators.txlog import (
+        tx_merge,
+        tx_read,
+        tx_snapshot,
+    )
 
     path = str(tmp_path_factory.mktemp("mtab")) + "/t"
     base = spark.createDataFrame(
         [(1, "p1", 10), (2, "p1", 20), (3, "p2", 30), (4, "p3", 40)],
         "k int, part string, amt int",
     )
-    merge_into_table(spark, path, base, ["k"], "part")  # first write
-    p3_files = {
-        f: os.path.getmtime(f)
-        for f in glob.glob(os.path.join(path, "part=p3", "*.parquet"))
-    }
-    assert p3_files
+    tx_merge(spark, path, base, ["k"], partition_by=["part"])  # first write
+
+    def p3_files():
+        return {
+            f: os.path.getmtime(os.path.join(path, f))
+            for f in tx_snapshot(path)["files"]
+            if f.startswith("part=p3/")
+        }
+
+    before = p3_files()
+    assert before
 
     src = spark.createDataFrame(
         [(2, "p1", 200), (5, "p2", 50)], "k int, part string, amt int"
     )
-    merge_into_table(spark, path, src, ["k"], "part")
+    res = tx_merge(spark, path, src, ["k"], partition_by=["part"])
+    assert res["files_rewritten"] == 1  # the p1 file holding k=2
 
-    got = {r.k: (r.part, r.amt) for r in spark.read.parquet(path).collect()}
+    got = {r.k: (r.part, r.amt) for r in tx_read(spark, path).collect()}
     assert got == {
         1: ("p1", 10), 2: ("p1", 200), 3: ("p2", 30),
         4: ("p3", 40), 5: ("p2", 50),
     }
-    # p3 untouched: same files, same mtimes
-    p3_after = {
-        f: os.path.getmtime(f)
-        for f in glob.glob(os.path.join(path, "part=p3", "*.parquet"))
-    }
-    assert p3_after == p3_files
+    # p3 untouched: same live files, same mtimes
+    assert p3_files() == before
 
 
 def test_merge_into_table_matched_delete(spark, tmp_path_factory):
     from pyspark.sql import functions as F2
 
-    from weather_data_warehouse_aws_spark.operators.merge import merge_into_table
+    from weather_data_warehouse_aws_spark.operators.txlog import tx_merge, tx_read
 
     path = str(tmp_path_factory.mktemp("mtab2")) + "/t"
     base = spark.createDataFrame(
         [(1, "p1", 10), (2, "p1", 20)], "k int, part string, amt int"
     )
-    merge_into_table(spark, path, base, ["k"], "part")
+    tx_merge(spark, path, base, ["k"], partition_by=["part"])
     src = spark.createDataFrame([(1, "p1", -1)], "k int, part string, amt int")
-    merge_into_table(
-        spark, path, src, ["k"], "part",
+    tx_merge(
+        spark, path, src, ["k"], partition_by=["part"],
         when_matched_delete=F2.col("__src_amt") < 0,
     )
-    assert {r.k for r in spark.read.parquet(path).collect()} == {2}
+    assert {r.k for r in tx_read(spark, path).collect()} == {2}
 
 
 def test_null_delete_predicate_keeps_row(spark):
@@ -197,69 +203,73 @@ def test_null_delete_predicate_keeps_row(spark):
 
 
 def test_merge_into_table_emptied_partition_removed(spark, tmp_path_factory):
-    """A partition whose merge result is EMPTY must disappear — dynamic
-    overwrite alone would leave its old files and resurrect deleted rows."""
-    from weather_data_warehouse_aws_spark.operators.merge import merge_into_table
+    """A partition whose merge result is EMPTY must disappear from the
+    snapshot — a dynamic partition overwrite would leave its old files
+    and resurrect the deleted rows."""
+    from weather_data_warehouse_aws_spark.operators.txlog import (
+        tx_merge,
+        tx_read,
+        tx_snapshot,
+    )
 
     path = str(tmp_path_factory.mktemp("mtab3")) + "/t"
     base = spark.createDataFrame(
         [(1, "p1", 10), (2, "p1", 20), (3, "p2", 30)], "k int, part string, amt int"
     )
-    merge_into_table(spark, path, base, ["k"], "part")
+    tx_merge(spark, path, base, ["k"], partition_by=["part"])
     src = spark.createDataFrame(
         [(1, "p1", -1), (2, "p1", -1)], "k int, part string, amt int"
     )
-    merge_into_table(
-        spark, path, src, ["k"], "part",
+    tx_merge(
+        spark, path, src, ["k"], partition_by=["part"],
         when_matched_delete=F.col("__src_amt") < 0,
     )
-    got = {r.k for r in spark.read.parquet(path).collect()}
+    got = {r.k for r in tx_read(spark, path).collect()}
     assert got == {3}, got  # p1 fully gone, p2 untouched
+    assert not [f for f in tx_snapshot(path)["files"] if f.startswith("part=p1/")]
 
 
 def test_emptied_partition_with_special_chars_removed(spark, tmp_path_factory):
     """Partition values containing spaces/colons get hive-escaped dir
-    names; the emptied-partition cleanup must find them anyway."""
-    from weather_data_warehouse_aws_spark.operators.merge import merge_into_table
+    names; emptying such a partition must retire its files anyway."""
+    from weather_data_warehouse_aws_spark.operators.txlog import tx_merge, tx_read
 
     path = str(tmp_path_factory.mktemp("mtab4")) + "/t"
     base = spark.createDataFrame(
         [(1, "a b:c", 10), (2, "plain", 20)], "k int, part string, amt int"
     )
-    merge_into_table(spark, path, base, ["k"], "part")
+    tx_merge(spark, path, base, ["k"], partition_by=["part"])
     src = spark.createDataFrame([(1, "a b:c", -1)], "k int, part string, amt int")
-    merge_into_table(
-        spark, path, src, ["k"], "part",
+    tx_merge(
+        spark, path, src, ["k"], partition_by=["part"],
         when_matched_delete=F.col("__src_amt") < 0,
     )
-    rows = spark.read.parquet(path).collect()
+    rows = tx_read(spark, path).collect()
     assert {r.k for r in rows} == {2}
 
 
 def test_first_write_gets_duplicate_key_guard(spark, tmp_path_factory):
     """A dup-keyed INITIAL batch must not silently seed a table that
     violates the merge-key uniqueness invariant later merges assume."""
-    from weather_data_warehouse_aws_spark.operators.merge import merge_into_table
+    from weather_data_warehouse_aws_spark.operators.txlog import (
+        tx_exists,
+        tx_merge,
+        tx_read,
+    )
 
     path = str(tmp_path_factory.mktemp("mrg_first")) + "/t"
     dup = spark.createDataFrame(
         [(1, "x", 10), (1, "y", 20)], "k int, name string, part int"
     )
     with pytest.raises(Exception, match="nondeterministic"):
-        merge_into_table(spark, path, dup, ["k"], "part")
-    import os
-
-    assert not os.path.isdir(path) or not any(
-        f.endswith(".parquet")
-        for _r, _d, fs in os.walk(path)
-        for f in fs
-    )
+        tx_merge(spark, path, dup, ["k"], partition_by=["part"])
+    assert not tx_exists(path)
     # explicit opt-out still allowed on the first write too
-    merge_into_table(
-        spark, path + "2", dup, ["k"], "part",
+    tx_merge(
+        spark, path + "2", dup, ["k"], partition_by=["part"],
         check_duplicate_source_keys=False,
     )
-    assert spark.read.parquet(path + "2").count() == 2
+    assert tx_read(spark, path + "2").count() == 2
 
 
 def test_null_merge_keys_follow_sql_3vl(spark):

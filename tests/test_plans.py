@@ -154,27 +154,28 @@ def test_scan_pruning_documents(spark, sf_dir):
 
 def test_partitioned_silver_prunes_partitions(spark, tmp_path_factory):
     """Hive-style date partitioning (the reference's #1 hand-tuned layout
-    choice) must show PartitionFilters in the scan — a date filter reads
-    one directory, not the table."""
+    choice) must show PartitionFilters in the `tx_read` scan of the
+    transaction-log silver table — a date filter reads one directory, not
+    the table."""
     import datetime as dt
 
     from weather_data_warehouse_aws_spark.pipeline.generate import generate_bronze
+    from weather_data_warehouse_aws_spark.operators.txlog import tx_read
     from weather_data_warehouse_aws_spark.pipeline.silver import (
         build_silver_current,
         read_bronze,
-        write_silver,
+        write_silver_tx,
     )
 
     bronze = str(tmp_path_factory.mktemp("bronze_prune"))
     generate_bronze(bronze, days=3, seed=11)
     out = str(tmp_path_factory.mktemp("silver_prune"))
-    write_silver(
+    write_silver_tx(
         build_silver_current(read_bronze(spark, bronze, "current")),
         out,
         "observation_date",
-        mode="overwrite_partitions",
     )
-    filtered = spark.read.parquet(out).filter(
+    filtered = tx_read(spark, out).filter(
         F.col("observation_date") == dt.date(2024, 1, 2)
     )
     plan = physical_plan(filtered)
@@ -192,22 +193,22 @@ def test_dynamic_partition_pruning(spark, tmp_path_factory):
 
     from weather_data_warehouse_aws_spark.pipeline.generate import generate_bronze
     from weather_data_warehouse_aws_spark.pipeline.gold import build_dim_date
+    from weather_data_warehouse_aws_spark.operators.txlog import tx_read
     from weather_data_warehouse_aws_spark.pipeline.silver import (
         build_silver_current,
         read_bronze,
-        write_silver,
+        write_silver_tx,
     )
 
     bronze = str(tmp_path_factory.mktemp("bronze_dpp"))
     generate_bronze(bronze, days=4, seed=13)
     out = str(tmp_path_factory.mktemp("silver_dpp"))
-    write_silver(
+    write_silver_tx(
         build_silver_current(read_bronze(spark, bronze, "current")),
         out,
         "observation_date",
-        mode="overwrite_partitions",
     )
-    fact = spark.read.parquet(out)
+    fact = tx_read(spark, out)
     dim = build_dim_date(spark, "2024-01-01", "2024-12-31").filter(
         F.col("is_weekend") & (F.col("month") == 1)
     )

@@ -555,49 +555,42 @@ _tbl_rows = st.lists(
 
 @given(tgt=_tbl_rows, src=_tbl_rows, sync=st.booleans())
 @_SETTINGS
-def test_merge_into_table_fuzz(spark, tmp_path_factory, tgt, src, sync):
-    """Table-level merge ≡ a Python model of its partition-scoped
+def test_tx_merge_fuzz(spark, tmp_path_factory, tgt, src, sync):
+    """Partitioned `tx_merge` ≡ a Python model of its table-wide
     semantics: update-all + insert always; by-source deletes (sync) apply
-    only WITHIN partitions the source touches. Keys are deduped
-    last-write-wins to satisfy the unique-source precondition; a key's
-    partition is pinned to its target partition (the operator's
-    partition-stability contract)."""
-    from weather_data_warehouse_aws_spark.operators.merge import merge_into_table
+    to the WHOLE table; a matched key may move to another partition (the
+    key scan retires its old copy). Keys are deduped last-write-wins to
+    satisfy the unique-source precondition."""
+    from weather_data_warehouse_aws_spark.operators.txlog import (
+        tx_merge,
+        tx_overwrite,
+        tx_read,
+    )
 
     tgt_d = {k: (p, v) for k, p, v in tgt}
     src_d = {k: (p, v) for k, p, v in src}
-    # partition stability: a source key that exists in the target keeps
-    # the target's partition
-    src_d = {
-        k: (tgt_d[k][0] if k in tgt_d else p, v) for k, (p, v) in src_d.items()
-    }
 
     path = str(tmp_path_factory.mktemp("mfz")) + "/t"
-    spark.createDataFrame(
-        [(k, p, v) for k, (p, v) in tgt_d.items()], "k int, part string, v int"
-    ).write.partitionBy("part").parquet(path)
+    tx_overwrite(
+        spark.createDataFrame(
+            [(k, p, v) for k, (p, v) in tgt_d.items()],
+            "k int, part string, v int",
+        ),
+        path,
+        partition_by=["part"],
+    )
     source = spark.createDataFrame(
         [(k, p, v) for k, (p, v) in src_d.items()], "k int, part string, v int"
     )
-    kwargs = {}
-    if sync:
-        kwargs["when_not_matched_by_source_delete"] = F.lit(True)
-    merge_into_table(spark, path, source, ["k"], "part", **kwargs)
+    tx_merge(
+        spark, path, source, ["k"], partition_by=["part"],
+        when_not_matched_by_source_delete=F.lit(True) if sync else None,
+    )
 
-    got = sorted((r.k, r.part, r.v) for r in spark.read.parquet(path).collect())
+    got = sorted((r.k, r.part, r.v) for r in tx_read(spark, path).collect())
 
-    affected = {p for p, _ in src_d.values()}
-    out = {}
-    for k, (p, v) in tgt_d.items():
-        if k in src_d:
-            out[k] = src_d[k]            # matched: update-all
-        elif sync and p in affected:
-            continue                     # by-source delete, scoped
-        else:
-            out[k] = (p, v)              # untouched (or unaffected partition)
-    for k, (p, v) in src_d.items():
-        if k not in tgt_d:
-            out[k] = (p, v)              # insert
+    out = {} if sync else dict(tgt_d)  # sync: unmatched target rows go
+    out.update(src_d)                  # matched update-all (may move) + insert
     want = sorted((k, p, v) for k, (p, v) in out.items())
     assert got == want
 

@@ -195,6 +195,7 @@ def test_foreachbatch_upsert_sink(spark, events_dir, tmp_path_factory):
     checkpointed re-runs are no-ops."""
     import pyspark.sql.functions as SF
 
+    from weather_data_warehouse_aws_spark.operators.txlog import tx_read
     from weather_data_warehouse_aws_spark.streaming.jobs import run_upsert_foreachbatch
 
     out = str(tmp_path_factory.mktemp("feb_out")) + "/silver"
@@ -202,12 +203,12 @@ def test_foreachbatch_upsert_sink(spark, events_dir, tmp_path_factory):
     stream = read_events_stream(spark, events_dir).withColumn("day", SF.to_date("ts"))
     # 8 source files, maxFilesPerTrigger=4 -> 2 micro-batches over the same days
     run_upsert_foreachbatch(stream, out, ckpt, "day", ["event_id"])
-    n1 = spark.read.parquet(out).count()
+    n1 = tx_read(spark, out).count()
     assert n1 == spark.read.parquet(events_dir).count()
-    assert spark.read.parquet(out).select("event_id").distinct().count() == n1
+    assert tx_read(spark, out).select("event_id").distinct().count() == n1
     # re-run: checkpoint marks everything processed -> no-op, no duplicates
     run_upsert_foreachbatch(stream, out, ckpt, "day", ["event_id"])
-    assert spark.read.parquet(out).count() == n1
+    assert tx_read(spark, out).count() == n1
 
 
 def test_streaming_dedup_exactly_once(spark, events_dir, tmp_path_factory):
@@ -376,12 +377,9 @@ def test_stream_stream_attribution_join_matches_batch(spark, events_dir, tmp_pat
 
 
 def test_foreachbatch_upsert_preserves_null_partition(spark, tmp_path_factory):
-    """Existing rows in the NULL partition must survive a batch that
-    touches it: isin([None]) never matches NULL, and without the null-safe
-    membership the dynamic overwrite would replace the whole
-    __HIVE_DEFAULT_PARTITION__ with just the batch rows."""
-    import pyspark.sql.functions as SF
-
+    """Existing rows in the NULL partition (__HIVE_DEFAULT_PARTITION__)
+    must survive a batch that touches it: only matched keys update."""
+    from weather_data_warehouse_aws_spark.operators.txlog import tx_overwrite, tx_read
     from weather_data_warehouse_aws_spark.streaming.jobs import (
         run_upsert_foreachbatch,
     )
@@ -395,7 +393,7 @@ def test_foreachbatch_upsert_preserves_null_partition(spark, tmp_path_factory):
         [(1, None, "keep1"), (2, None, "keep2"), (3, "d1", "keep3")],
         "id bigint, day string, v string",
     )
-    seed.write.partitionBy("day").parquet(out)
+    tx_overwrite(seed, out, partition_by=["day"])
 
     # one batch: update id=1 (null partition) + insert id=4 (null partition)
     batch = spark.createDataFrame(
@@ -409,7 +407,7 @@ def test_foreachbatch_upsert_preserves_null_partition(spark, tmp_path_factory):
     )
     run_upsert_foreachbatch(stream, out, ckpt, "day", ["id"])
 
-    got = {r.id: (r.day, r.v) for r in spark.read.parquet(out).collect()}
+    got = {r.id: (r.day, r.v) for r in tx_read(spark, out).collect()}
     assert got == {
         1: (None, "updated"),   # upserted
         2: (None, "keep2"),     # existing null-partition row SURVIVES
@@ -461,10 +459,9 @@ def test_scd2_point_in_time_stream_enrichment(spark, tmp_path_factory):
 
 
 def test_foreachbatch_upsert_tx_mode_moves_partitions(spark, tmp_path_factory):
-    """target_format="tx": each micro-batch is one atomic tx_merge commit,
-    and — unlike parquet mode's documented caveat — a key whose partition
-    value CHANGES is retired from its old partition (the key scan finds it
-    wherever it lives; the dynamic-overwrite path can't)."""
+    """Each micro-batch is one atomic tx_merge commit, and a key whose
+    partition value CHANGES is retired from its old partition (the key
+    scan finds it wherever it lives; a partition-scoped overwrite can't)."""
     from weather_data_warehouse_aws_spark.operators.txlog import (
         tx_history,
         tx_read,
@@ -486,18 +483,14 @@ def test_foreachbatch_upsert_tx_mode_moves_partitions(spark, tmp_path_factory):
         .option("maxFilesPerTrigger", 1)
         .parquet(feed)
     )
-    run_upsert_foreachbatch(
-        stream, out, ckpt, "day", ["id"], target_format="tx"
-    )
+    run_upsert_foreachbatch(stream, out, ckpt, "day", ["id"])
     assert tx_read(spark, out).count() == 3
 
     # id=2 MOVES d1 -> d2 (updated value), id=4 inserts
     spark.createDataFrame(
         [(2, "d2", "b2"), (4, "d1", "d")], "id bigint, day string, v string"
     ).coalesce(1).write.mode("append").parquet(feed)
-    run_upsert_foreachbatch(
-        stream, out, ckpt, "day", ["id"], target_format="tx"
-    )
+    run_upsert_foreachbatch(stream, out, ckpt, "day", ["id"])
     got = {r.id: (r.day, r.v) for r in tx_read(spark, out).collect()}
     assert got == {
         1: ("d1", "a"),
@@ -509,15 +502,6 @@ def test_foreachbatch_upsert_tx_mode_moves_partitions(spark, tmp_path_factory):
 
     # checkpointed re-run: no-op, same state, no extra commits
     n_commits = len(tx_history(out))
-    run_upsert_foreachbatch(
-        stream, out, ckpt, "day", ["id"], target_format="tx"
-    )
+    run_upsert_foreachbatch(stream, out, ckpt, "day", ["id"])
     assert len(tx_history(out)) == n_commits
     assert tx_read(spark, out).count() == 4
-
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="target_format"):
-        run_upsert_foreachbatch(
-            stream, out, ckpt, "day", ["id"], target_format="iceberg"
-        )

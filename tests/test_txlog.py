@@ -826,6 +826,26 @@ def test_cli_tx_roundtrip(spark, tmp_path, capsys):
     )
 
 
+def test_cli_tx_merge_sync_deletes(spark, tmp_path, capsys):
+    """`tx merge --sync-deletes` is a full sync: matched keys update,
+    unmatched source keys insert, and target rows whose key the source
+    lacks are deleted table-wide."""
+    from weather_data_warehouse_aws_spark.__main__ import main
+
+    t = str(tmp_path / "t")
+    tx_append(_mk(spark, range(0, 5)), t)
+    tx_append(_mk(spark, range(100, 105)), t)
+    src = str(tmp_path / "src")
+    spark.createDataFrame(
+        [Row(id=2, val="UPD"), Row(id=103, val="UPD"), Row(id=7, val="NEW")]
+    ).write.parquet(src)
+    assert main(["tx", "merge", "--table", t, "--source", src,
+                 "--keys", "id", "--sync-deletes"]) == 0
+    assert "merged at v" in capsys.readouterr().out
+    got = {r.id: r.val for r in tx_read(spark, t).collect()}
+    assert got == {2: "UPD", 103: "UPD", 7: "NEW"}
+
+
 # ---------------------------------------------------------------------------
 # round-6 hardening: LogStore seam, torn-tail recovery, stray-file tolerance,
 # NaN-safe float pruning, vacuum horizon race, stage-dir sweep

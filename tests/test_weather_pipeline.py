@@ -18,7 +18,7 @@ from weather_data_warehouse_aws_spark.pipeline.run import run_pipeline
 from weather_data_warehouse_aws_spark.pipeline.silver import (
     build_silver_current,
     read_bronze,
-    write_silver,
+    write_silver_tx,
 )
 
 DAYS = 3
@@ -132,12 +132,23 @@ def test_silver_forecast_explode_and_horizon(layers):
 
 
 def test_silver_idempotent_rewrite(spark, bronze_dir, tmp_path_factory):
-    """M4 fix: re-processing the same days must not duplicate silver rows."""
+    """M4 fix: re-processing the same days must not duplicate silver rows;
+    each landing is one new table version holding the same rows."""
+    from weather_data_warehouse_aws_spark.operators.txlog import tx_read
+
     out = str(tmp_path_factory.mktemp("silver_idem"))
     silver = build_silver_current(read_bronze(spark, bronze_dir, "current"))
-    n1 = write_silver(silver, out, "observation_date", mode="overwrite_partitions")
-    n2 = write_silver(silver, out, "observation_date", mode="overwrite_partitions")
-    assert n1 == n2 == spark.read.parquet(out).count()
+    r1 = write_silver_tx(silver, out, "observation_date")
+    r2 = write_silver_tx(silver, out, "observation_date")
+    assert r1["rows"] == r2["rows"] == tx_read(spark, out).count()
+    assert r2["version"] == r1["version"] + 1
+    cols = [c for c in silver.columns if c != "processed_timestamp"]
+
+    def rows(version):
+        df = tx_read(spark, out, version=version).select(cols)
+        return sorted(str(tuple(r)) for r in df.collect())
+
+    assert rows(r1["version"]) == rows(r2["version"])
 
 
 # ------------------------------------------------------------------ gold
@@ -346,16 +357,17 @@ def test_inferred_schema_gust_introspection(spark, tmp_path_factory):
 
 def test_write_silver_compact_single_file_per_partition(spark, bronze_dir, tmp_path_factory):
     import os
+    from collections import Counter
+
+    from weather_data_warehouse_aws_spark.operators.txlog import tx_read, tx_snapshot
 
     out = str(tmp_path_factory.mktemp("silver_compact"))
     silver = build_silver_current(read_bronze(spark, bronze_dir, "current"))
-    n = write_silver(silver, out, "observation_date", mode="overwrite_partitions", compact=True)
-    assert n == spark.read.parquet(out).count()
-    for part in os.listdir(out):
-        if "=" not in part:
-            continue
-        files = [f for f in os.listdir(os.path.join(out, part)) if f.endswith(".parquet")]
-        assert len(files) == 1, (part, files)
+    res = write_silver_tx(silver, out, "observation_date")
+    assert res["rows"] == tx_read(spark, out).count()
+    per_date = Counter(os.path.dirname(f) for f in tx_snapshot(out)["files"])
+    assert len(per_date) == DAYS
+    assert all(n == 1 for n in per_date.values()), per_date
 
 
 # ------------------------------------------------------- gold on the txlog

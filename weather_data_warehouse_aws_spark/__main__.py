@@ -10,7 +10,6 @@ Athena console; the equivalent local surface:
     list-queries                                     show the registry
     curate     --docs PATH --out DIR [--eval PATH]   corpus curation run
     index      --table DIR --column COL [--lookup V] per-file Bloom index
-    merge      --table DIR --source P --keys K --partition-col C  upsert
     doctor     --table DIR [--skew-col C]            table health report
     snapshot   --warehouse DIR                       pinned coherent read
     tx         {history,read,compact,erase,vacuum,cleanup-log,merge,
@@ -167,6 +166,9 @@ def main(argv: list[str] | None = None) -> int:
     tx.add_argument("--source", default=None,
                     help="merge source parquet path / clone source tx table")
     tx.add_argument("--keys", default=None, help="merge keys, comma-separated")
+    tx.add_argument("--sync-deletes", action="store_true",
+                    help="merge: delete target rows whose key is absent "
+                    "from the source (table-wide full sync)")
 
     mvp = sub.add_parser(
         "mv",
@@ -192,21 +194,6 @@ def main(argv: list[str] | None = None) -> int:
     mvp.add_argument("--replace", action="store_true",
                      help="create: redefine an existing view")
     mvp.add_argument("--limit", type=int, default=20, help="read row cap")
-
-    m = sub.add_parser(
-        "merge",
-        help="MERGE a source batch into a hive-partitioned parquet table "
-        "(partition-pruned upsert; optional full-sync delete)",
-    )
-    m.add_argument("--table", required=True, help="target table directory")
-    m.add_argument("--source", required=True, help="source batch parquet")
-    m.add_argument("--keys", required=True, help="comma-separated merge keys")
-    m.add_argument("--partition-col", required=True)
-    m.add_argument(
-        "--sync-deletes", action="store_true",
-        help="delete target rows absent from the source "
-        "(within affected partitions)",
-    )
 
     args = parser.parse_args(argv)
 
@@ -671,11 +658,16 @@ def main(argv: list[str] | None = None) -> int:
             if not args.source or not args.keys:
                 print("tx merge needs --source and --keys", file=sys.stderr)
                 return 2
+            from pyspark.sql import functions as F
+
             res = txlog.tx_merge(
                 spark,
                 args.table,
                 spark.read.parquet(args.source),
                 [k.strip() for k in args.keys.split(",")],
+                when_not_matched_by_source_delete=(
+                    F.lit(True) if args.sync_deletes else None
+                ),
             )
             print(
                 f"merged at v{res['version']}: rewrote {res['files_rewritten']} "
@@ -828,24 +820,6 @@ def main(argv: list[str] | None = None) -> int:
             res = txlog.tx_erase_keys(spark, args.table, args.column, vals)
             print(f"removed {res['rows_removed']} row(s), rewrote "
                   f"{res['files_rewritten']} file(s) at v{res['version']}")
-        return 0
-
-    if args.cmd == "merge":
-        from pyspark.sql import functions as F
-
-        from .operators.merge import merge_into_table
-
-        source = spark.read.parquet(args.source)
-        kwargs = {}
-        if args.sync_deletes:
-            kwargs["when_not_matched_by_source_delete"] = F.lit(True)
-        merge_into_table(
-            spark, args.table, source,
-            [k.strip() for k in args.keys.split(",")],
-            args.partition_col, **kwargs,
-        )
-        print(f"merged {source.count()} source rows into {args.table}; "
-              f"table now {spark.read.parquet(args.table).count()} rows")
         return 0
 
     if args.cmd == "query":

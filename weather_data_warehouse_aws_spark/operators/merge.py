@@ -21,10 +21,10 @@ Plan shape (the 100 TB contract):
   as a window count over the source's join shuffle, surfacing via
   `raise_error` at action time; no extra eager scan.
 
-Writing the merged state back is the caller's sink choice (dynamic
-partition overwrite for partition-local merges — see
-`streaming/jobs.py::run_upsert_foreachbatch` — or a versioned swap,
-`operators/maintenance.py`).
+Writing the merged state back to a table is `operators/txlog.py::tx_merge`:
+it runs this transform over only the live files that can hold a matched
+key and commits the rewrite atomically (the streaming upsert sink,
+`streaming/jobs.py::run_upsert_foreachbatch`, and `tx merge` ride it).
 """
 
 from __future__ import annotations
@@ -35,7 +35,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-__all__ = ["merge_into", "merge_into_table"]
+__all__ = ["merge_into"]
 
 
 def _guard_duplicate_keys(source: DataFrame, keys: Sequence[str]) -> DataFrame:
@@ -215,94 +215,3 @@ def merge_into(
         out_cols.append(expr.alias(c))
     return kept.select(*out_cols)
 
-
-def merge_into_table(
-    spark,
-    table_path: str,
-    source: DataFrame,
-    keys: Sequence[str],
-    partition_col: str,
-    **merge_kwargs,
-) -> None:
-    """Table-level MERGE INTO a hive-partitioned parquet table with a
-    PARTITION-PRUNED rewrite: only the partitions present in the source
-    batch are read, merged (`merge_into` semantics — pass its clause
-    kwargs through), and dynamically overwritten. Cost ∝ |affected
-    partitions|, never the table; the untouched partitions' files are not
-    read, not rewritten, not listed beyond the scan's own pruning.
-
-    Requires rows to stay IN their partition (the merge key implies the
-    partition value). A source row whose partition differs from the
-    target copy's would upsert into the new partition while the old copy
-    survives in the unread old partition — the same physical limit as
-    `streaming/jobs.py::run_upsert_foreachbatch` (a table format's
-    key index is what lifts it); route partition-moving corrections
-    through a full snapshot diff instead. `when_not_matched_by_source_*`
-    clauses therefore act only WITHIN affected partitions — target rows
-    in untouched partitions are out of scope by construction.
-
-    First write (no table yet) = plain partitioned write of the source,
-    after the same duplicate-source-key guard later batches get.
-    The merged result is localCheckpoint'ed before the overwrite because
-    it reads the very partitions being replaced.
-    """
-    from ..sources.tables import read_parquet_if_exists
-
-    target = read_parquet_if_exists(spark, table_path)
-    if target is None:
-        # first write gets the SAME duplicate-source-key guard every later
-        # batch gets — a dup-keyed initial batch must not silently seed a
-        # table that violates the uniqueness invariant all subsequent
-        # merges assume
-        src = source
-        if merge_kwargs.get("check_duplicate_source_keys", True):
-            src = _guard_duplicate_keys(src, keys)
-        src.write.partitionBy(partition_col).parquet(table_path)
-        return
-    affected = [r[0] for r in source.select(partition_col).distinct().collect()]
-    if not affected:
-        return
-    non_null = [a for a in affected if a is not None]
-    cond = F.col(partition_col).isin(non_null) if non_null else F.lit(False)
-    if len(non_null) != len(affected):
-        cond = cond | F.col(partition_col).isNull()
-    merged = merge_into(target.filter(cond), source, keys, **merge_kwargs)
-    merged = merged.localCheckpoint(eager=True)
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        merged.write.partitionBy(partition_col).mode("overwrite").parquet(table_path)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-    # dynamic overwrite only rewrites partitions PRESENT in the output — an
-    # affected partition whose merge result is EMPTY (every row deleted)
-    # would keep its old files and resurrect the deleted rows. Drop those
-    # partition dirs explicitly via the Hadoop FS client (works on any
-    # filesystem, not just local).
-    surviving = {
-        r[0] for r in merged.select(partition_col).distinct().collect()
-    }
-    emptied = [a for a in affected if a not in surviving]
-    if emptied:
-        jvm = spark._jvm
-        hconf = spark._jsc.hadoopConfiguration()
-        root = jvm.org.apache.hadoop.fs.Path(table_path)
-        fs = root.getFileSystem(hconf)
-        # hive-escape special characters in the partition VALUE the same
-        # way Spark's writer names the directory (spaces, ':', '%', …)
-        def _escaped(v) -> str:
-            if v is None:
-                return "__HIVE_DEFAULT_PARTITION__"
-            try:
-                return jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.escapePathName(
-                    str(v)
-                )
-            except Exception:
-                return str(v)
-
-        for val in emptied:
-            p = jvm.org.apache.hadoop.fs.Path(
-                root, f"{partition_col}={_escaped(val)}"
-            )
-            if fs.exists(p):
-                fs.delete(p, True)

@@ -4628,7 +4628,7 @@ def tx_merge(
     `when_not_matched_by_source_delete` forces every live file into the
     candidate set (the clause may delete rows anywhere). A merge into an
     absent/empty table degenerates to a guarded first write (insert-only),
-    honoring `check_duplicate_source_keys` like merge_into_table.
+    honoring `check_duplicate_source_keys` like later merges.
 
     Isolation: write-serializable against REPLACING writers — a concurrent
     compact/erase/merge that rewrote a candidate file raises TxConflict.

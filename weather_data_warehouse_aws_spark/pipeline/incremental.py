@@ -7,7 +7,8 @@ join per dashboard refresh. The materialized alternative (pipeline/run.py)
 pays it once per load but still over full history. This module closes the
 loop: given the set of changed dates, derive exactly which
 `forecast_for_date` partitions the |Δt|<1h join could have changed, rebuild
-those partitions from date-pruned silver slices, and dynamic-overwrite them.
+those partitions from date-pruned silver slices, and swap them in with one
+transaction-log commit (`rebuild_accuracy_tx`).
 
 Affected-partition math for a changed date D:
 * new observations ON D match forecasts with `forecast_for_time` in
@@ -22,7 +23,6 @@ the property that keeps a year-old lakehouse's daily load constant-time.
 from __future__ import annotations
 
 import datetime as dt
-import os
 from collections.abc import Iterable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -44,38 +44,6 @@ def affected_forecast_dates(
             out.add(d + dt.timedelta(days=k))
         out.add(d + dt.timedelta(days=1))
     return sorted(out)
-
-
-def rebuild_accuracy_partitions(
-    spark: SparkSession,
-    fact_forecast: DataFrame,
-    fact_actual: DataFrame,
-    accuracy_path: str,
-    changed_dates: Iterable[dt.date],
-    *,
-    horizon_days: int = HORIZON_DAYS,
-) -> list[dt.date]:
-    """Rebuild exactly the affected accuracy partitions; returns them.
-
-    Both join inputs are date-pruned BEFORE the band join (observations one
-    hour beyond the partition range on each side), so the recompute scans
-    O(affected days) of silver, not history. Output is partitioned by
-    `forecast_for_date` and dynamic-partition-overwritten.
-    """
-    targets = affected_forecast_dates(changed_dates, horizon_days=horizon_days)
-    lo, hi = min(targets), max(targets)
-    f_slice, a_slice = _accuracy_slices(fact_forecast, fact_actual, lo, hi)
-    acc = fact_forecast_accuracy(f_slice, a_slice).withColumn(
-        "forecast_for_date", F.to_date("forecast_for_time")
-    )
-
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        acc.write.partitionBy("forecast_for_date").mode("overwrite").parquet(accuracy_path)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-    return targets
 
 
 def _accuracy_slices(
@@ -108,22 +76,26 @@ def rebuild_accuracy_tx(
     *,
     horizon_days: int = HORIZON_DAYS,
 ) -> list[dt.date]:
-    """Transaction-log twin of `rebuild_accuracy_partitions`: recompute the
-    affected `forecast_for_date` envelope and swap it in with ONE atomic
-    `tx_replace_where` commit against the gold accuracy table
-    `pipeline/run.py` materializes.
+    """Recompute the affected `forecast_for_date` envelope and swap it in
+    with ONE atomic `tx_replace_where` commit against the gold accuracy
+    table `pipeline/run.py` materializes.
 
-    What the log buys over dynamic-partition overwrite:
-    * the delete-region + insert is a single commit — a concurrent reader
-      sees the whole refresh or none of it, and a crash mid-refresh leaves
-      the table at the previous version instead of half-replaced;
-    * a date whose recompute comes back EMPTY is actually emptied —
-      dynamic overwrite only rewrites partitions PRESENT in the output, so
-      deleted rows resurrect (the documented gotcha this replaces);
+    Both join inputs are date-pruned BEFORE the band join (observations
+    one hour beyond the envelope on each side), so the recompute scans
+    O(affected days) of silver, not history. Because delete-region and
+    insert are a single commit:
+    * a concurrent reader sees the whole refresh or none of it, and a
+      crash mid-refresh leaves the table at the previous version instead
+      of half-replaced;
+    * a date whose recompute comes back EMPTY is actually emptied — a
+      dynamic partition overwrite would only rewrite partitions PRESENT in
+      the output, so deleted rows would resurrect;
     * the pre-refresh fact stays time-travelable and `tx_restore`-able.
-    Returns the affected dates.
+    Returns the affected dates; no changed dates means no commit.
     """
     targets = affected_forecast_dates(changed_dates, horizon_days=horizon_days)
+    if not targets:
+        return []
     lo, hi = min(targets), max(targets)
     f_slice, a_slice = _accuracy_slices(fact_forecast, fact_actual, lo, hi)
     acc = fact_forecast_accuracy(f_slice, a_slice).withColumn(

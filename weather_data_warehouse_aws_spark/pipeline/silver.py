@@ -4,7 +4,7 @@ Same semantics, re-expressed Spark-first with explicit schemas:
 
 * ``current``: flatten nested JSON (P1-P3), DQ gates (P4-P6), keyed dedup
   (A4), derived observation_date / is_daytime / heat_index_category (X2,
-  P11), partitioned parquet write (S4).
+  P11), date-partitioned transaction-log write (S4).
 * ``forecast``: explode the 40-point `list` (X1), flatten, horizon math
   (F3/F8/F10), partitioned write.
 
@@ -16,8 +16,9 @@ Scale decisions vs the reference:
   (`bronze_to_silver.py:114-119`) — writers here return counts from a single
   cached evaluation;
 * idempotence fix (SURVEY §2.11 M4): the reference appends while re-reading
-  the FULL bronze glob every run, duplicating silver. `write_silver` supports
-  dynamic partition overwrite so re-processing a day replaces that day.
+  the FULL bronze glob every run, duplicating silver. `write_silver_tx`
+  replaces the batch's dates in one transaction-log commit, so
+  re-processing a day swaps that day atomically.
 """
 
 from __future__ import annotations
@@ -172,14 +173,13 @@ def write_silver_tx(df: DataFrame, path: str, partition_col: str) -> dict:
 
     This is the layer where the reference's M4 bug actually lives
     (`bronze_to_silver.py:114-117` appends while re-reading the full
-    bronze glob) — `write_silver`'s dynamic-partition overwrite fixes it
-    by DISCIPLINE (re-running replaces the day), this fixes it by
-    CONSTRUCTION: a crash mid-write leaves the table at the previous
-    version (no torn partition a concurrent reader can see), re-runs swap
-    the same dates idempotently, the pre-ingest state stays
-    time-travelable, and a bad load rolls back with `tx_restore`. The
-    hive layout (and so exact date pruning) is unchanged — the log
-    records `col=value/` relpaths.
+    bronze glob) — this fixes it by CONSTRUCTION: a crash mid-write
+    leaves the table at the previous version (no torn partition a
+    concurrent reader can see), re-runs swap the same dates
+    idempotently, the pre-ingest state stays time-travelable, and a bad
+    load rolls back with `tx_restore`. The log records hive `col=value/`
+    relpaths, so `tx_read` plans keep exact date pruning
+    (PartitionFilters, dynamic partition pruning).
 
     The batch's distinct dates are collected driver-side (bounded by
     days-per-ingest, not data size) and the write is compacted to one
@@ -222,37 +222,3 @@ def write_silver_tx(df: DataFrame, path: str, partition_col: str) -> dict:
     finally:
         df.unpersist()
 
-
-def write_silver(
-    df: DataFrame, path: str, partition_col: str, *, mode: str = "append",
-    compact: bool = False,
-) -> int:
-    """Partitioned parquet write (S4); returns written row count.
-
-    `mode="overwrite_partitions"` uses dynamic partition overwrite — the
-    idempotent re-ingest the reference lacks (M4): reprocessing a date
-    replaces exactly that date's partition instead of appending duplicates.
-
-    `compact=True` repartitions on the partition column first so every
-    hive partition lands as ONE file instead of one-per-task — the write-
-    time alternative to `operators/maintenance.compact_partitions` when a
-    day's data fits one task comfortably (this domain: KBs/day).
-    """
-    spark = df.sparkSession
-    if compact:
-        df = df.repartition(partition_col)
-    df = df.persist()
-    try:
-        n = df.count()  # single evaluation; the write reuses the cache
-        if mode == "overwrite_partitions":
-            prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-            try:
-                df.write.partitionBy(partition_col).mode("overwrite").parquet(path)
-            finally:
-                spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-        else:
-            df.write.partitionBy(partition_col).mode(mode).parquet(path)
-        return n
-    finally:
-        df.unpersist()

@@ -86,25 +86,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def read_parquet_if_exists(spark: SparkSession, path: str) -> DataFrame | None:
-    """`spark.read.parquet(path)`, or None when the path doesn't exist yet.
-
-    Only the path-missing AnalysisException maps to None — any other failure
-    (transient IO, corrupt footer, permission) re-raises. Callers use this to
-    distinguish "first run, nothing to merge" from "read failed": treating a
-    transient error as first-run and then overwriting the target would
-    silently destroy existing data.
-    """
-    from pyspark.errors import AnalysisException
-
-    try:
-        return spark.read.parquet(path)
-    except AnalysisException as e:
-        if "PATH_NOT_FOUND" in str(e) or "Path does not exist" in str(e):
-            return None
-        raise
-
-
 def register_views(spark: SparkSession, sf_dir: str, tables=TABLES) -> None:
     """Register each table as a temp view (SURVEY.md §2.1 S9/S10 analog).
 

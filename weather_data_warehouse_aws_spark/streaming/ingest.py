@@ -2,10 +2,11 @@
 
 The reference's daily Glue job re-reads the ENTIRE bronze glob and appends
 to silver — duplicating silver on every run (SURVEY §2.11 M4). The batch
-fix is dynamic partition overwrite (pipeline/silver.py); the *architectural*
-fix is this: bronze is a file-arrival stream, and Structured Streaming's
-checkpoint tracks exactly which files have been processed. Re-running the
-job is a no-op; a new day's files are picked up incrementally; a crashed run
+fix is a transaction-log replace of the batch's dates
+(pipeline/silver.py::write_silver_tx); the *architectural* fix is this:
+bronze is a file-arrival stream, and Structured Streaming's checkpoint
+tracks exactly which files have been processed. Re-running the job is a
+no-op; a new day's files are picked up incrementally; a crashed run
 resumes where it stopped. Exactly-once into the silver TRANSACTION-LOG
 table: each micro-batch is one atomic `tx_append` under an
 `(app, batch_id)` idempotence token, so sink-side replays commit nothing

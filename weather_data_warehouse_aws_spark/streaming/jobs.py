@@ -23,7 +23,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..session import ensure_session_conf
-from ..sources.tables import read_parquet_if_exists
 
 EVENTS_STREAM_SCHEMA = (
     "event_id bigint, ts timestamp, user_id bigint, event_type string, "
@@ -166,39 +165,24 @@ def run_upsert_foreachbatch(
     key_cols: list[str],
     *,
     timeout_sec: int = 180,
-    target_format: str = "parquet",
 ) -> None:
-    """foreachBatch UPSERT sink: merge each micro-batch into the target by
-    key, rewriting only affected partitions.
+    """foreachBatch UPSERT sink: merge each micro-batch by key into a
+    TRANSACTION-LOG table partitioned by `partition_col`.
 
     The plain file sink appends exactly-once but can't update; a naive
     per-batch dynamic overwrite LOSES rows when two micro-batches touch the
-    same partition (the second replaces the first). The correct merge:
-    existing rows in affected partitions that don't collide on the key are
-    kept (left_anti), batch rows win, and only affected partitions rewrite.
-    This is vanilla Spark's spelling of Delta MERGE / JDBC upsert, riding
-    streaming's checkpointed progress tracking.
-
-    Contract (parquet mode): `partition_col` must be immutable per key
-    (the norm for date-partitioned event tables). A batch row that CHANGES
-    a key's partition value upserts into the new partition but cannot
-    retire the copy in the old one — finding it would take a full-table
-    key scan per batch, which is the index a real table format maintains.
-    Route partition-moving corrections through a batch snapshot-diff
-    rebuild (operators/cdc.py) instead.
-
-    `target_format="tx"` upserts into a TRANSACTION-LOG table via
-    `tx_merge` instead: each micro-batch is one atomic commit, only files
-    containing matched keys rewrite (stats-pruned key scan — not
-    partition-granular), the partition-move caveat disappears (the key
+    same partition (the second replaces the first). Here each micro-batch
+    is one atomic `tx_merge` commit: only files containing matched keys
+    rewrite (stats-pruned key scan — not partition-granular), a key whose
+    partition value changes is retired from its old partition (the key
     scan finds the old copy wherever it lives and the update lands in its
-    new partition), and a replayed batch is naturally idempotent (its
-    keys are already matched, so the re-merge reproduces the same state).
-    Unlike parquet mode, duplicate keys WITHIN one batch raise — merge
-    semantics need one source row per key; pre-aggregate the batch to
-    latest-per-key upstream if the feed can repeat keys."""
+    new partition), and a replayed batch is naturally idempotent (its keys
+    are already matched, so the re-merge reproduces the same state).
+    Duplicate keys WITHIN one batch raise — merge semantics need one
+    source row per key; pre-aggregate the batch to latest-per-key
+    upstream if the feed can repeat keys. Read the target with `tx_read`."""
 
-    def _write_tx(batch_df: DataFrame, batch_id: int) -> None:
+    def _write(batch_df: DataFrame, batch_id: int) -> None:
         from ..operators.txlog import tx_merge
 
         tx_merge(
@@ -206,58 +190,8 @@ def run_upsert_foreachbatch(
             list(key_cols), partition_by=[partition_col],
         )
 
-    def _write(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        batch_df = batch_df.persist()
-        try:
-            affected = [r[0] for r in batch_df.select(partition_col).distinct().collect()]
-            if not affected:
-                return
-            # path-missing → first batch, nothing to merge. Any OTHER read
-            # error re-raises: treating a transient failure as first-batch
-            # would let the dynamic overwrite replace affected partitions
-            # with only the batch rows, silently losing existing data.
-            target = read_parquet_if_exists(spark, silver_path)
-            if target is None:
-                merged = batch_df
-            else:
-                # null-safe membership: `isin([None])` never matches a NULL
-                # partition, which would EXCLUDE existing NULL-partition
-                # rows from the merge while the dynamic overwrite still
-                # rewrites that directory — silently dropping them
-                non_null = [a for a in affected if a is not None]
-                cond = (
-                    F.col(partition_col).isin(non_null)
-                    if non_null
-                    else F.lit(False)
-                )
-                if len(non_null) != len(affected):
-                    cond = cond | F.col(partition_col).isNull()
-                existing = target.filter(cond)
-                merged = existing.join(
-                    batch_df.select(*key_cols), key_cols, "left_anti"
-                ).unionByName(batch_df)
-                # materialize BEFORE the write: `merged` reads the very
-                # partitions the overwrite is about to replace
-                merged = merged.localCheckpoint(eager=True)
-            prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-            try:
-                merged.write.partitionBy(partition_col).mode("overwrite").parquet(silver_path)
-            finally:
-                spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-        finally:
-            batch_df.unpersist()
-
-    if target_format not in ("parquet", "tx"):
-        raise ValueError(
-            f"run_upsert_foreachbatch: target_format must be 'parquet' or "
-            f"'tx', got {target_format!r}"
-        )
     q = (
-        stream_df.writeStream.foreachBatch(
-            _write_tx if target_format == "tx" else _write
-        )
+        stream_df.writeStream.foreachBatch(_write)
         .option("checkpointLocation", checkpoint_path)
         .trigger(availableNow=True)
         .start()
@@ -275,7 +209,6 @@ def run_incremental_agg_foreachbatch(
     initial_agg: DataFrame | None = None,
     count_col: str = "n_rows",
     timeout_sec: int = 180,
-    state_format: str = "versioned",
 ) -> None:
     """Streaming incremental gold maintenance: each micro-batch is a slice
     of a CDC changefeed (operators/cdc.py::snapshot_diff shape — op +
@@ -283,25 +216,15 @@ def run_incremental_agg_foreachbatch(
     apply_agg_delta. The fact stream is never re-scanned; per batch the
     cost is |batch| + |aggregate|.
 
-    Exactly-once without a table format: each batch writes the FULL (small)
-    aggregate to a versioned dir ``{agg_path}/v=<batch_id>`` after reading
-    the newest version with id < batch_id as the prior. A retried batch
-    (failure between write and checkpoint commit) re-reads the same prior
-    and overwrites its own version — idempotent, no double-count; the
-    half-written version is never a read candidate for its own retry.
-    ``read_current_agg`` resolves the newest complete version. Retention:
-    after each successful write, versions older than the one the batch was
-    derived from are garbage-collected, so a long-running feed holds at
-    most two versions (current + retry-safety prior) on disk.
+    Exactly-once: the aggregate is a transaction-log table and each batch
+    commits under the `("incremental_agg", batch_id)` token
+    (`_run_tx_foreachbatch`), so a replayed batch neither double-counts
+    nor skips. ``read_current_agg`` reads the current state.
 
     Ordering: a changefeed is inherently ordered; the single-writer file
     source delivers files in arrival order (`latestFirst` stays false).
     `initial_agg` seeds the prior for the very first batch (e.g.
     grouped_sums over the base snapshot); default is an empty aggregate.
-
-    Version listing uses the local filesystem (tests, local[n]); a cluster
-    deployment swaps the two `os`/`glob` calls for the Hadoop FS client —
-    the versioning protocol is unchanged.
     """
     from ..operators.cdc import apply_agg_delta
 
@@ -320,10 +243,9 @@ def run_incremental_agg_foreachbatch(
                 prior = grouped_sums(empty_snap, group_by, sum_cols, count_col)
         return apply_agg_delta(prior, batch_df, group_by, sum_cols, count_col)
 
-    _run_state_foreachbatch(
+    _run_tx_foreachbatch(
         diff_stream, agg_path, checkpoint_path, _merge,
-        timeout_sec=timeout_sec, state_format=state_format,
-        app="incremental_agg",
+        timeout_sec=timeout_sec, app="incremental_agg",
     )
 
 
@@ -365,19 +287,17 @@ def run_txtable_agg_foreachbatch(
     *,
     count_col: str = "n_rows",
     timeout_sec: int = 180,
-    state_format: str = "tx",
 ) -> None:
     """End-to-end incremental view maintenance ON the table format: the
     input is a `txtable` change-feed stream (sources/tx_source.py —
     commit-version offsets over a transaction-log table), the state is a
-    maintained grouped SUM/COUNT aggregate, and with the default
-    ``state_format="tx"`` the state itself lives on a transaction-log
-    table with `(app, batch_id)` exactly-once tokens. Per micro-batch the
-    cost is |changed files| + |aggregate| — the base table is never
-    re-scanned, and a crashed/replayed batch can neither double-count nor
-    skip. This is the composition the pieces were built for: gold tables
-    on the log (pipeline/run.py) stream their own changes into downstream
-    aggregates with no extra CDC storage."""
+    maintained grouped SUM/COUNT aggregate, and the state itself lives on
+    a transaction-log table with `(app, batch_id)` exactly-once tokens.
+    Per micro-batch the cost is |changed files| + |aggregate| — the base
+    table is never re-scanned, and a crashed/replayed batch can neither
+    double-count nor skip. This is the composition the pieces were built
+    for: gold tables on the log (pipeline/run.py) stream their own changes
+    into downstream aggregates with no extra CDC storage."""
     from ..operators.cdc import apply_agg_delta, grouped_sums
 
     cols = list(group_by) + list(sum_cols)
@@ -389,38 +309,10 @@ def run_txtable_agg_foreachbatch(
             prior = grouped_sums(empty_snap, group_by, sum_cols, count_col)
         return apply_agg_delta(prior, diff, group_by, sum_cols, count_col)
 
-    _run_state_foreachbatch(
+    _run_tx_foreachbatch(
         feed_stream, agg_path, checkpoint_path, _merge,
-        timeout_sec=timeout_sec, state_format=state_format,
-        app="txtable_agg",
+        timeout_sec=timeout_sec, app="txtable_agg",
     )
-
-
-def _run_state_foreachbatch(
-    stream_df: DataFrame,
-    state_path: str,
-    checkpoint_path: str,
-    merge_fn,
-    *,
-    timeout_sec: int = 180,
-    state_format: str = "versioned",
-    app: str = "state",
-) -> None:
-    """Dispatch a mergeable-state streaming job to its state store:
-    `versioned` (the self-contained versioned-dir protocol below) or `tx`
-    (the transaction-log table — `_run_tx_foreachbatch`)."""
-    if state_format == "tx":
-        _run_tx_foreachbatch(
-            stream_df, state_path, checkpoint_path, merge_fn,
-            timeout_sec=timeout_sec, app=app,
-        )
-    elif state_format == "versioned":
-        _run_versioned_foreachbatch(
-            stream_df, state_path, checkpoint_path, merge_fn,
-            timeout_sec=timeout_sec,
-        )
-    else:
-        raise ValueError(f"state_format must be 'versioned' or 'tx', got {state_format!r}")
 
 
 def _run_tx_foreachbatch(
@@ -438,14 +330,15 @@ def _run_tx_foreachbatch(
     the result under the idempotence token ``(app, batch_id)`` — a batch
     REPLAYED after a sink-side crash finds its token already folded and
     commits nothing (exactly-once, the Delta txn-action design), so no
-    versioned-dir bookkeeping, completeness markers, or manual GC: history
-    is the log, retention is `tx_vacuum`, and consumers read the state
-    with `tx_read` (time-travelable to any retained batch's version).
-
-    vs the versioned-dir protocol: same guarantees, but the prior-read /
-    publish race needs no care at all here (data files are immutable; the
-    overwrite is one atomic commit), and the state keeps the full audit
-    trail until vacuumed instead of exactly two versions."""
+    completeness markers or manual GC: history is the log, retention is
+    `tx_vacuum`, and consumers read the state with `tx_read`
+    (time-travelable to any retained batch's version).
+    The prior-read / publish race needs no care: data files are immutable
+    and the overwrite is one atomic commit. ``merge_fn`` must be
+    DETERMINISTIC given (batch, prior) — that is what makes a retried
+    batch reproduce the same state. Used by the incremental-aggregate,
+    change-feed aggregate and CMS maintenance jobs; any mergeable state
+    rides the same scaffold."""
     from ..operators.txlog import tx_exists, tx_read, tx_snapshot, tx_vacuum
 
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
@@ -461,9 +354,9 @@ def _run_tx_foreachbatch(
                 prior = tx_read(spark, state_path)
         updated = merge_fn(spark, batch_df, prior)
         tx_overwrite(updated, state_path, txn=(app, int(batch_id)))
-        # retention: current + retry-safety prior STATE, matching the
-        # versioned protocol's footprint. Each folded batch appends TWO
-        # commits (overwrite + this vacuum), so 2 states = 4 versions.
+        # retention: current + retry-safety prior STATE. Each folded
+        # batch appends TWO commits (overwrite + this vacuum), so
+        # 2 states = 4 versions.
         tx_vacuum(state_path, retain_versions=4)
 
     q = (
@@ -475,89 +368,14 @@ def _run_tx_foreachbatch(
     q.awaitTermination(timeout_sec)
 
 
-def _run_versioned_foreachbatch(
-    stream_df: DataFrame,
-    state_path: str,
-    checkpoint_path: str,
-    merge_fn,
-    *,
-    timeout_sec: int = 180,
-) -> None:
-    """The shared versioned-dir exactly-once protocol: per micro-batch,
-    resolve the newest COMPLETE version with id < batch_id as the prior
-    (None on the first batch), call ``merge_fn(spark, batch_df, prior)``,
-    write the result to ``{state_path}/v=<batch_id>``, then GC versions
-    older than (current, retry-safety prior). merge_fn must be
-    DETERMINISTIC given (batch, prior) — that is what makes a retried
-    batch idempotent. Used by the incremental-aggregate and CMS
-    maintenance jobs; any mergeable state rides the same scaffold."""
-    import glob
-    import os
-    import shutil
-
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        prior_ids = [v for v in _complete_versions(state_path) if v < batch_id]
-        prior = (
-            spark.read.parquet(os.path.join(state_path, f"v={max(prior_ids)}"))
-            if prior_ids
-            else None
-        )
-        updated = merge_fn(spark, batch_df, prior)
-        # materialize before writing: `prior` may read the dir being listed
-        updated.localCheckpoint(eager=True).write.mode("overwrite").parquet(
-            os.path.join(state_path, f"v={batch_id}")
-        )
-        # GC: the new version is durable; keep the prior it was derived
-        # from (a retry of THIS batch re-reads it), drop everything older
-        # so a long-running feed holds at most two versions on disk
-        keep = {batch_id} | ({max(prior_ids)} if prior_ids else set())
-        for p in glob.glob(os.path.join(state_path, "v=*")):
-            try:
-                vid = int(os.path.basename(p).split("=")[1])
-            except ValueError:
-                continue
-            if vid < batch_id and vid not in keep:
-                shutil.rmtree(p, ignore_errors=True)
-
-    q = (
-        stream_df.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(timeout_sec)
-
-
-def _complete_versions(agg_path: str) -> list[int]:
-    """Version ids whose directory carries Spark's _SUCCESS marker — a
-    crash mid-write (or a racing reader) must never surface a torn,
-    partially-written aggregate as 'the newest version'."""
-    import glob
-    import os
-
-    return sorted(
-        int(os.path.basename(p).split("=")[1])
-        for p in glob.glob(os.path.join(agg_path, "v=*"))
-        if os.path.exists(os.path.join(p, "_SUCCESS"))
-    )
-
-
 def read_current_agg(spark: SparkSession, agg_path: str) -> DataFrame:
-    """Newest COMPLETE maintained-aggregate state, whichever store the job
-    used: a transaction-log table reads through its snapshot; a
-    versioned dir resolves the newest version carrying _SUCCESS
-    (in-flight or torn versions are skipped in both stores)."""
-    import os
-
+    """Current maintained-aggregate state: the transaction-log table's
+    latest snapshot (an in-flight batch is never visible)."""
     from ..operators.txlog import tx_exists, tx_read
 
-    if tx_exists(agg_path):
-        return tx_read(spark, agg_path)
-    ids = _complete_versions(agg_path)
-    if not ids:
-        raise FileNotFoundError(f"no complete aggregate versions under {agg_path}")
-    return spark.read.parquet(os.path.join(agg_path, f"v={ids[-1]}"))
+    if not tx_exists(agg_path):
+        raise FileNotFoundError(f"no maintained aggregate under {agg_path}")
+    return tx_read(spark, agg_path)
 
 
 def correlated_event_stream(
@@ -687,25 +505,23 @@ def run_cms_foreachbatch(
     width: int = 2048,
     depth: int = 5,
     timeout_sec: int = 180,
-    state_format: str = "versioned",
 ) -> None:
     """Streaming heavy-hitter maintenance: each micro-batch's Count-Min
     sketch (operators/cms.py) merges into a persisted sketch — frequency
     state over an unbounded stream in d·width longs, never a per-key table.
 
-    Exactly-once by the same versioned-dir protocol as
+    Exactly-once by the same transaction-log state store as
     `run_incremental_agg_foreachbatch`: merge is an exact integer SUM, so
-    a retried batch re-merging against the same prior version produces the
-    identical sketch (idempotent); versions older than the retry-safety
-    prior are garbage-collected. `read_current_agg(spark, cms_path)` reads
-    the live sketch for `cms_estimate`/`cms_heavy_hitters` probes."""
+    a retried batch re-merging against the same prior produces the
+    identical sketch. `read_current_agg(spark, cms_path)` reads the live
+    sketch for `cms_estimate`/`cms_heavy_hitters` probes."""
     from ..operators.cms import cms_build, cms_merge
 
     def _merge(spark, batch_df: DataFrame, prior) -> DataFrame:
         batch_sketch = cms_build(batch_df, col, width=width, depth=depth)
         return batch_sketch if prior is None else cms_merge(prior, batch_sketch)
 
-    _run_state_foreachbatch(
+    _run_tx_foreachbatch(
         stream_df, cms_path, checkpoint_path, _merge,
-        timeout_sec=timeout_sec, state_format=state_format, app="cms",
+        timeout_sec=timeout_sec, app="cms",
     )
