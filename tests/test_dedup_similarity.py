@@ -680,3 +680,35 @@ def test_reworked_callsites_leave_cache_manager_empty(spark, sf_smoke_dir):
 
     q_ann_methods(spark, sf_smoke_dir).count()
     assert mgr.isEmpty(), "q_ann_methods leaked tier caches"
+
+
+def test_word_shingles_tokenize_once_and_match_inline_spelling(spark):
+    """word_shingles / word_ngrams bind the token array once per row; the
+    arrays must equal the inline spelling's (split re-evaluated at every
+    position) on null, empty, short, repetitive and long documents."""
+    from weather_data_warehouse_aws_spark.functions.text import (
+        word_ngrams,
+        word_shingles,
+    )
+
+    def inline(n: int, distinct: bool):
+        toks = r"split(trim(text), '\\s+')"
+        grams = (
+            f"transform(sequence(1, greatest(size({toks}) - {n} + 1, 1)), "
+            f"i -> concat_ws(' ', slice({toks}, i, {n})))"
+        )
+        return F.expr(f"array_distinct({grams})" if distinct else grams)
+
+    long_doc = " ".join(f"w{i % 37}" for i in range(2000))
+    docs = spark.createDataFrame(
+        [(1, None), (2, ""), (3, "   "), (4, "a b"), (5, " a b c a b c a b c "),
+         (6, long_doc)],
+        "id long, text string",
+    )
+    for n in (1, 2, 5):
+        for new, distinct in ((word_shingles, True), (word_ngrams, False)):
+            got = docs.select("id", new("text", n).alias("s")).orderBy("id").collect()
+            want = docs.select("id", inline(n, distinct).alias("s")).orderBy("id").collect()
+            assert got == want, (new.__name__, n)
+    assert str(word_shingles("text", 5)).count("split(") == 1
+    assert str(word_ngrams("text", 2)).count("split(") == 1

@@ -198,3 +198,46 @@ def test_null_ids_agree_on_driver_and_distributed_paths(spark, monkeypatch):
     monkeypatch.setattr(G, "_DRIVER_MAX_EDGES", 0)
     rounds = {r["node"]: r["component"] for r in connected_components(edges).collect()}
     assert driver == rounds == expected
+
+
+def test_driver_results_are_sized_local_relations(spark):
+    """The driver paths return Arrow-built local relations (LocalTableScan,
+    no Python-parallelized ExistingRDD, sized for the planner) with the
+    rows, types and non-null schema the createDataFrame(list) build had."""
+    from weather_data_warehouse_aws_spark.operators.graph import pagerank
+    from weather_data_warehouse_aws_spark.plans.inspect import physical_plan
+    from weather_data_warehouse_aws_spark.plans.lint import lint_plan
+
+    edges = _edges(spark, [(7, 2), (2, 9), (40, 41), (9, 40), (3, 3)])
+    sedges = spark.createDataFrame(
+        [("b", "a"), ("c", "b")], "id_a string, id_b string"
+    )
+    cc = connected_components(edges)
+    pr = pagerank(edges, iters=3)
+    pr_dir = pagerank(edges, iters=3, symmetric=False)
+    cc_s = connected_components(sedges)
+    pr_s = pagerank(sedges, iters=2)
+    for df in (cc, pr, pr_dir, cc_s, pr_s):
+        plan = physical_plan(df, "simple")
+        assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan
+        assert "unsized-rdd" not in {f.code for f in lint_plan(df)}
+        assert not any(f.nullable for f in df.schema)
+
+    # rows pinned to the createDataFrame(list) build's output
+    assert [f.dataType.simpleString() for f in cc.schema] == ["bigint", "bigint"]
+    assert [f.dataType.simpleString() for f in pr_s.schema] == ["string", "bigint"]
+    assert sorted(map(tuple, cc.collect())) == [
+        (2, 2), (3, 3), (7, 2), (9, 2), (40, 2), (41, 2)
+    ]
+    assert list(map(tuple, pr.collect())) == [
+        (2, 1370812500000), (3, 1000000000000), (7, 602093750000),
+        (9, 1054187500000), (40, 1370812500000), (41, 602093750000),
+    ]
+    assert list(map(tuple, pr_dir.collect())) == [
+        (2, 277500000000), (3, 1000000000000), (7, 150000000000),
+        (9, 385875000000), (40, 1000000000000), (41, 1000000000000),
+    ]
+    assert sorted(map(tuple, cc_s.collect())) == [("a", "a"), ("b", "a"), ("c", "a")]
+    assert list(map(tuple, pr_s.collect())) == [
+        ("a", 936250000000), ("b", 1127500000000), ("c", 936250000000)
+    ]

@@ -70,3 +70,37 @@ def test_no_pushdown_fires_on_derived_column_filter(spark, sf_smoke_dir):
     assert "no-pushdown" in _codes(derived, "warn")
     raw = docs.filter(F.col("doc_id") == 3)
     assert "no-pushdown" not in _codes(raw)
+
+
+def test_unsized_rdd_fires_on_python_list_frame(spark):
+    df = spark.createDataFrame([(1, 2)], "x long, y long")
+    assert "unsized-rdd" in _codes(df, "warn")
+
+
+def test_unsized_rdd_quiet_on_checkpoint_and_arrow_frames(spark):
+    import pyarrow as pa
+
+    assert "unsized-rdd" not in _codes(spark.range(5).localCheckpoint())
+    arrow = spark.createDataFrame(
+        pa.table({"x": pa.array([1], pa.int64()), "y": pa.array([2], pa.int64())}),
+        "x long, y long",
+    )
+    assert "unsized-rdd" not in _codes(arrow)
+
+
+def test_curation_packed_has_no_unsized_rdd(spark, sf_smoke_dir):
+    from weather_data_warehouse_aws_spark.pipeline.curate import (
+        curate_corpus,
+        release_curation,
+    )
+
+    docs = load_table(spark, sf_smoke_dir, "documents").select("doc_id", "text")
+    eval_docs = docs.filter(F.col("doc_id") % 10 == 0).select(
+        (F.col("doc_id") + 10_000_000).alias("doc_id"), "text"
+    )
+    stages = curate_corpus(docs, eval_docs=eval_docs)
+    try:
+        assert stages["dup_pairs"].count() > 0  # the graph stage has edges
+        assert "unsized-rdd" not in _codes(stages["packed"])
+    finally:
+        release_curation(stages)

@@ -5,6 +5,14 @@ count — the measurement tool behind the job-count claims in
 OPTIMIZATION_r*.md (guide §1: measure first; at sf0.1 the suite is
 job-overhead-bound, so job COUNTS are the load-independent evidence).
 
+Below each job it prints that job's completed stages: executor run time,
+task count and the stage's RDD operation path from the status store's
+operation graph. A scan of a Python-parallelized frame reads
+`parallelize > mapPartitions > map > mapPartitions > ...` and a stage that
+recurs with the same path across jobs is a relation rescanned per
+consumer; a stage whose time sits in one `Generate` path is a heavy
+explode.
+
 Usage: python tools/profile_jobs.py <query> [iters]   (iters >= 1, default 2)
 The first iteration warms codegen/broadcast caches; jobs are counted on
 the LAST iteration only (group boundaries via job-group tags).
@@ -22,6 +30,31 @@ import urllib.request
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+
+
+def _stage_path(status_store, stage_id: int) -> str:
+    """The stage's RDD operation scopes in RDD-id order, e.g.
+    `parallelize > mapPartitions > WholeStageCodegen (2) > Exchange`: each
+    RDD is named by its innermost scope (the root cluster is the stage
+    itself), consecutive repeats folded."""
+    nodes: list[tuple[int, str]] = []
+
+    def walk(cluster, scope):
+        it = cluster.childNodes().iterator()
+        while it.hasNext():
+            node = it.next()
+            nodes.append((node.id(), scope or node.name()))
+        it = cluster.childClusters().iterator()
+        while it.hasNext():
+            child = it.next()
+            walk(child, child.name())
+
+    walk(status_store.operationGraphForStage(stage_id).rootCluster(), None)
+    path: list[str] = []
+    for _, name in sorted(nodes):
+        if not path or path[-1] != name:
+            path.append(name)
+    return " > ".join(path)
 
 
 def main() -> None:
@@ -63,6 +96,8 @@ def main() -> None:
     port = urllib.parse.urlparse(spark.sparkContext.uiWebUrl).port
     url = f"http://localhost:{port}/api/v1/applications/{app_id}/jobs?status=succeeded"
     jobs = json.loads(urllib.request.urlopen(url).read())
+    stages_url = f"http://localhost:{port}/api/v1/applications/{app_id}/stages"
+    status_store = spark.sparkContext._jsc.sc().statusStore()
     last = [j for j in jobs if j.get("jobGroup") == f"iter{iters - 1}"]
     last.sort(key=lambda j: j["jobId"])
     total_ms = 0.0
@@ -76,6 +111,13 @@ def main() -> None:
         total_ms += ms
         desc = (j.get("name") or j.get("description") or "")[:100]
         print(f"job {j['jobId']:>4} {ms:8.0f}ms tasks={j['numTasks']:>4} {desc}")
+        for sid in sorted(j["stageIds"]):
+            attempts = json.loads(urllib.request.urlopen(f"{stages_url}/{sid}").read())
+            for st in attempts:
+                if st["status"] != "COMPLETE":
+                    continue  # skipped: its shuffle output was reused
+                print(f"    stage {sid:>4} run={st['executorRunTime']:7d}ms "
+                      f"tasks={st['numTasks']:>4} {_stage_path(status_store, sid)}")
     print(f"# {len(last)} jobs in final iter, sum(job wall)={total_ms:.0f}ms, "
           f"iter wall={t_last:.3f}s")
 

@@ -74,6 +74,24 @@ def token_count_sql(expr: str) -> str:
     return f"CAST(len({tokens_sql(expr)}) AS INT)"
 
 
+def bind_tokens(text_expr: str, body: str) -> str:
+    """Spark SQL: `body` evaluated with the lambda variable `toks` bound to
+    the whitespace tokens of `text_expr`, split ONCE per row.
+
+    A SQL lambda re-evaluates every expression inlined in its body once
+    per element, and Spark does not hoist it out: `transform(seq, i ->
+    slice(split(text, ..), i, n))` re-splits the whole text at every
+    position, O(L²) in document length. Binding the split array as the
+    single element of a one-element `transform` evaluates it once; the
+    body then reads the bound array. The result is the body's value
+    unchanged, null text included (the body sees `toks` = NULL exactly
+    where the inline spelling saw a NULL split)."""
+    return (
+        rf"element_at(transform(array(split(trim({text_expr}), '\\s+')), "
+        f"toks -> {body}), 1)"
+    )
+
+
 # BPE-style pretokenizer (GPT-2's pattern family), restricted to the
 # Java-regex ∩ RE2 subset both engines share: common contraction suffixes,
 # space-prefixed letter runs, digit runs, punctuation runs. No lookahead
@@ -144,18 +162,27 @@ def fingerprint_sql(expr: str) -> str:
 
 
 # ---------------------------------------------------------- word shingles
+def word_ngrams(text_expr: str, n: int) -> Column:
+    """Every word n-gram in position order, duplicates kept; a doc with
+    fewer than n tokens yields a single n-gram of all its tokens (slice()
+    is 1-indexed). Tokenized once per row (`bind_tokens`)."""
+    return F.expr(bind_tokens(
+        text_expr,
+        f"transform(sequence(1, greatest(size(toks) - {n} + 1, 1)), "
+        f"i -> concat_ws(' ', slice(toks, i, {n})))",
+    ))
+
+
 def word_shingles(text_expr: str, n: int) -> Column:
     """Distinct word n-gram shingles as an array column (SQL HOFs only).
 
-    slice() is 1-indexed in both engines; sequence/generate_series bounds
-    chosen so a doc with fewer than n tokens yields a single shingle of all
-    its tokens.
+    sequence/generate_series bounds chosen so a doc with fewer than n
+    tokens yields a single shingle of all its tokens. The token array is
+    bound once per row (`word_ngrams` → `bind_tokens`): with the split
+    inlined in the per-position lambda, every document was re-tokenized
+    once per shingle position, O(L²) in its length.
     """
-    toks = rf"split(trim({text_expr}), '\\s+')"
-    return F.expr(
-        f"array_distinct(transform(sequence(1, greatest(size({toks}) - {n} + 1, 1)), "
-        f"i -> concat_ws(' ', slice({toks}, i, {n}))))"
-    )
+    return F.array_distinct(word_ngrams(text_expr, n))
 
 
 def word_shingles_sql(expr: str, n: int) -> str:

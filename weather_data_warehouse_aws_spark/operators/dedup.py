@@ -35,9 +35,12 @@ from pyspark.sql.window import Window
 
 from ..functions.text import (
     MINHASH_P,
+    bind_tokens,
     fingerprint,
     minhash_constants,
     portable_hash60,
+    token_count,
+    word_ngrams,
     word_shingles,
 )
 
@@ -117,11 +120,6 @@ def positioned_shingles(
     positions will be joined against."""
     if hash_fn is None:
         hash_fn = portable_hash60
-    toks = r"split(trim(__text), '\\s+')"
-    shingles = (
-        f"transform(sequence(1, greatest(size({toks}) - {n} + 1, 1)),"
-        f" i -> concat_ws(' ', slice({toks}, i, {n})))"
-    )
     spread = df.select(
         F.col(id_col).alias("doc_id"), F.col(text_col).alias("__text")
     )
@@ -130,8 +128,8 @@ def positioned_shingles(
     )
     return spread.select(
         "doc_id",
-        F.expr(f"size({toks})").alias("n_tok"),
-        F.posexplode(F.expr(shingles)).alias("pos0", "shingle"),
+        token_count(F.col("__text")).alias("n_tok"),
+        F.posexplode(word_ngrams("__text", n)).alias("pos0", "shingle"),
     ).select(
         "doc_id",
         (F.col("pos0") + 1).alias("pos"),
@@ -618,12 +616,12 @@ def text_segments(df: DataFrame, id_col: str, text_col: str, *, seg_tokens: int 
     """(doc_id, seg_idx, seg_text): non-overlapping `seg_tokens`-token
     windows per document — one map pass, the explode is the only row
     multiplication (×⌈tokens/seg_tokens⌉)."""
-    toks = f"split(trim({text_col}), '\\\\s+')"
-    n_segs = f"greatest(CAST(ceil(size({toks}) / CAST({seg_tokens} AS DOUBLE)) AS INT), 1)"
-    segs = F.expr(
+    n_segs = f"greatest(CAST(ceil(size(toks) / CAST({seg_tokens} AS DOUBLE)) AS INT), 1)"
+    segs = F.expr(bind_tokens(
+        text_col,
         f"transform(sequence(0, {n_segs} - 1), "
-        f"i -> concat_ws(' ', slice({toks}, i * {seg_tokens} + 1, {seg_tokens})))"
-    )
+        f"i -> concat_ws(' ', slice(toks, i * {seg_tokens} + 1, {seg_tokens})))",
+    ))
     return df.select(
         F.col(id_col).alias("doc_id"), F.posexplode(segs).alias("seg_idx", "seg_text")
     )

@@ -35,8 +35,11 @@ closes the pairs→clusters gap a training-data user hits immediately.
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import LongType, StructField, StructType
 
 
 def _truncate(df: DataFrame, *, eager: bool = True) -> DataFrame:
@@ -80,7 +83,12 @@ _BROADCAST_MAX_NODES = 1_000_000
 #: that exceeds it falls through to the distributed rounds unchanged.
 #: Rationale (guide §1.2/§5): each distributed round costs jobs, not data,
 #: at this size — the fixpoint loop over a 1k-edge graph paid ~10 tiny
-#: jobs for work a union-find does in microseconds.
+#: jobs for work a union-find does in microseconds. The driver result
+#: goes back as an Arrow-built local relation (`_local_frame`) of at most
+#: one row per vertex (≤ 200k): ≈3 MB for integer ids, under Spark's 48 MB
+#: `spark.sql.execution.arrow.localRelationThreshold`, so it plans as a
+#: sized LocalTableScan (past that threshold — only with very long string
+#: ids — Spark ships the Arrow batches as a JVM RDD of unknown size).
 _DRIVER_MAX_EDGES = 200_000
 
 
@@ -88,11 +96,29 @@ def _parts(n_rows: int) -> int:
     return max(1, -(-n_rows // _PART_ROWS))
 
 
+def _local_frame(spark, schema: StructType, *columns: list) -> DataFrame:
+    """A driver-side result as a JVM local relation, built from a pyarrow
+    table. `createDataFrame(list_of_tuples)` would instead parallelize a
+    Python RDD: a LogicalRDD of unknown size (Long.MaxValue), so the
+    planner never broadcasts it, and every scan of it starts Python
+    workers — downstream joins rescan it once per consumer. The Arrow
+    path plans as LocalTableScan with exact size statistics."""
+    arrow_schema = to_arrow_schema(schema)
+    table = pa.Table.from_arrays(
+        [pa.array(col, type=f.type) for col, f in zip(columns, arrow_schema)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, schema)
+
+
 def _driver_components(spark, sym_rows, node_type) -> DataFrame:
     """Union-find over collected (node, nbr) rows; returns the same
     (node, component=min reachable id) relation the distributed fixpoint
     produces — min-label propagation and union-find compute the identical
-    labeling, so the result is path-independent."""
+    labeling, so the result is path-independent. The result is a sized
+    local relation (`_local_frame`): callers join it several times (cluster
+    sizes, survivor anti-join, split keying), and each join may broadcast
+    it."""
     parent: dict = {}
 
     def find(x):
@@ -120,15 +146,12 @@ def _driver_components(spark, sym_rows, node_type) -> DataFrame:
         m = comp_min.get(r)
         if m is None or n < m:
             comp_min[r] = n
-    from pyspark.sql.types import StructField, StructType
-
     schema = StructType([
         StructField("node", node_type, False),
         StructField("component", node_type, False),
     ])
-    return spark.createDataFrame(
-        [(n, comp_min[find(n)]) for n in parent], schema
-    )
+    nodes = list(parent)
+    return _local_frame(spark, schema, nodes, [comp_min[find(n)] for n in nodes])
 
 
 def connected_components(
@@ -163,9 +186,10 @@ def connected_components(
     # the broadcast path when they provably fit
     n_edges = sym.count()
     if n_edges <= _DRIVER_MAX_EDGES:
-        # measured-small graph: one collect + one createDataFrame replace
-        # the whole per-round job cadence (see _DRIVER_MAX_EDGES). The
-        # collect reads the partitions the count just materialized.
+        # measured-small graph: one collect + one Arrow-built local
+        # relation replace the whole per-round job cadence (see
+        # _DRIVER_MAX_EDGES). The collect reads the partitions the count
+        # just materialized.
         return _driver_components(
             edges.sparkSession, sym.collect(), sym.schema["node"].dataType
         )
@@ -335,15 +359,14 @@ def pagerank(
                 c = (ranks_d[s] * damping_pct) // (100 * outdeg[s])
                 inflow[d] = inflow.get(d, 0) + c
             ranks_d = {n: base + inflow.get(n, 0) for n in node_set}
-        from pyspark.sql.types import LongType, StructField, StructType
-
-        node_type = e.schema["s"].dataType
         schema = StructType([
-            StructField("node", node_type, False),
+            StructField("node", e.schema["s"].dataType, False),
             StructField("rank_scaled", LongType(), False),
         ])
-        return edges.sparkSession.createDataFrame(
-            sorted(ranks_d.items()), schema
+        ranked = sorted(ranks_d.items())
+        return _local_frame(
+            edges.sparkSession, schema,
+            [n for n, _ in ranked], [r for _, r in ranked],
         )
     p = _parts(n_edges)
     if e.rdd.getNumPartitions() > p:

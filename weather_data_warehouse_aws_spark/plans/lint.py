@@ -10,9 +10,10 @@ library call (`lint_plan(df)`) or from the shell
 Each finding is (level, code, message): level "error" marks shapes that
 melt down at scale regardless of data (cartesian products, row-at-a-time
 Python); "warn" marks shapes that are sometimes legitimate but deserve a
-look (BNLJ, single-partition exchanges, unpushed scan filters); "info" is
-plan inventory (join/exchange counts). The linter reads the ANALYZED
-physical plan only — it never executes the query.
+look (BNLJ, single-partition exchanges, unpushed scan filters, unsized
+RDD leaves); "info" is plan inventory (join/exchange counts). The linter
+reads the physical plan and the optimized logical plan's size statistics
+only — it never executes the query.
 """
 
 from __future__ import annotations
@@ -23,6 +24,24 @@ from typing import NamedTuple
 from pyspark.sql import DataFrame
 
 from .inspect import physical_plan, pushed_filters
+
+
+#: Catalyst's "size unknown" statistic (Long.MaxValue bytes)
+_UNKNOWN_SIZE = 2**63 - 1
+
+
+def _unsized_rdd_leaves(df: DataFrame) -> int:
+    """LogicalRDD leaves of the optimized plan whose size statistic is
+    unknown — what `createDataFrame(list)` builds (a parallelized Python
+    RDD); a checkpoint of a sized plan keeps the plan's statistics."""
+    leaves = df._jdf.queryExecution().optimizedPlan().collectLeaves().iterator()
+    n = 0
+    while leaves.hasNext():
+        leaf = leaves.next()
+        if (leaf.nodeName() == "LogicalRDD"
+                and int(leaf.stats().sizeInBytes()) >= _UNKNOWN_SIZE):
+            n += 1
+    return n
 
 
 class Finding(NamedTuple):
@@ -85,6 +104,17 @@ def lint_plan(df: DataFrame) -> list[Finding]:
             "IsNotNull reached any scan: the predicate is likely over a "
             "derived/cast column. Filter on raw columns where possible so "
             "the scan skips row groups.",
+        ))
+    n_unsized = _unsized_rdd_leaves(df)
+    if n_unsized:
+        out.append(Finding(
+            "warn", "unsized-rdd",
+            f"{n_unsized} LogicalRDD leaf/leaves of unknown size: the planner "
+            "can never broadcast them, and an RDD parallelized from Python "
+            "(createDataFrame(list)) starts Python workers on every scan. "
+            "Build small driver-side results from a pyarrow table "
+            "(spark.createDataFrame(pa.Table, schema) plans as a sized "
+            "LocalTableScan).",
         ))
     for op, code in (("SortMergeJoin", "smj"), ("BroadcastHashJoin", "bhj"),
                      ("Exchange", "exchange")):

@@ -9,7 +9,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.text import portable_hash60_sql
+from ..functions.text import bind_tokens, portable_hash60_sql, word_ngrams
 from ..operators.packing import concat_cut_sql, pack_concat_cut, shard_of
 from ..sources.tables import load_table
 
@@ -35,13 +35,13 @@ def q_chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle replays BOTH stages in SQL, so segment arithmetic (seg_start/
     seg_len/pack_offset) is differential-tested."""
     docs = load_table(spark, sf_dir, "documents")
-    toks = r"split(trim(text), '\\s+')"
-    n_chunks = f"greatest(CAST(ceil((size({toks}) - {CHUNK_TOKENS}) / {CHUNK_STRIDE}) AS INT) + 1, 1)"
-    chunks = F.expr(
+    n_chunks = f"greatest(CAST(ceil((size(toks) - {CHUNK_TOKENS}) / {CHUNK_STRIDE}) AS INT) + 1, 1)"
+    chunks = F.expr(bind_tokens(
+        "text",
         f"transform(sequence(0, {n_chunks} - 1), "
         f"i -> struct(i AS chunk_index, "
-        f"concat_ws(' ', slice({toks}, i * {CHUNK_STRIDE} + 1, {CHUNK_TOKENS})) AS chunk_text))"
-    )
+        f"concat_ws(' ', slice(toks, i * {CHUNK_STRIDE} + 1, {CHUNK_TOKENS})) AS chunk_text))",
+    ))
     items = (
         docs.select("doc_id", F.explode(chunks).alias("c"))
         .select(
@@ -112,15 +112,11 @@ def q_repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     docs = load_table(spark, sf_dir, "documents")
     toks = r"split(trim(text), '\\s+')"
-    bigrams_expr = (
-        f"transform(sequence(1, greatest(size({toks}) - 1, 1)), "
-        f"i -> concat_ws(' ', slice({toks}, i, 2)))"
-    )
     spread = docs.select("doc_id", "text").repartition(
         spark.sparkContext.defaultParallelism, "doc_id"
     )
     top_bigram = (
-        spread.select("doc_id", F.explode(F.expr(bigrams_expr)).alias("bg"))
+        spread.select("doc_id", F.explode(word_ngrams("text", 2)).alias("bg"))
         .groupBy("doc_id", "bg")
         .agg(F.count("*").alias("c"))
         .groupBy("doc_id")

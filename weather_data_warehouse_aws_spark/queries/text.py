@@ -31,6 +31,7 @@ from ..functions.text import (
     stopword_count_sql,
     token_count,
     token_count_sql,
+    word_ngrams,
 )
 from ..sources.tables import load_table
 
@@ -578,12 +579,8 @@ def q_doc_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     spread = docs.select("doc_id", "text").repartition(
         spark.sparkContext.defaultParallelism, "doc_id"
     )
-    bigrams_expr = (
-        f"transform(sequence(1, greatest(size({toks}) - 1, 1)), "
-        f"i -> concat_ws(' ', slice({toks}, i, 2)))"
-    )
     top_bigram = (
-        spread.select("doc_id", F.explode(F.expr(bigrams_expr)).alias("bg"))
+        spread.select("doc_id", F.explode(word_ngrams("text", 2)).alias("bg"))
         .groupBy("doc_id", "bg")
         .agg(F.count("*").alias("c"))
         .groupBy("doc_id")
