@@ -68,100 +68,6 @@ def test_string_column_and_sidecar_invisible(spark, sf_smoke_dir, tmp_path_facto
     assert got.count() >= 1
 
 
-def test_range_pruning_on_sorted_layout(spark, sf_smoke_dir, tmp_path_factory):
-    """Footer-stats range pruning: a range-clustered layout reads few
-    files, result ≡ full-scan BETWEEN, and statless safety keeps unknown
-    columns unpruned."""
-    from weather_data_warehouse_aws_spark.operators.file_index import (
-        prune_files_by_range,
-        read_with_range,
-    )
-    from weather_data_warehouse_aws_spark.operators.maintenance import write_sorted
-
-    src = load_table(spark, sf_smoke_dir, "documents").select("doc_id", "text")
-    path = str(tmp_path_factory.mktemp("rtab")) + "/t"
-    write_sorted(src, path, ["doc_id"], n_files=10)
-
-    all_files = prune_files_by_range(path, "doc_id", None, None)
-    assert len(all_files) == 10
-    cand = prune_files_by_range(path, "doc_id", 100, 149)
-    assert 1 <= len(cand) <= 3  # 500 ids over 10 range-partitioned files
-
-    got = read_with_range(spark, path, "doc_id", 100, 149)
-    want = spark.read.parquet(path).filter(F.col("doc_id").between(100, 149))
-    assert sorted(map(str, got.collect())) == sorted(map(str, want.collect()))
-    assert got.count() == 50
-
-    # open-ended + empty ranges
-    assert read_with_range(spark, path, "doc_id", 480, None).count() == 20
-    assert read_with_range(spark, path, "doc_id", 10_000, None).count() == 0
-
-
-def test_range_pruning_statless_and_allnull_files_kept(spark, tmp_path_factory):
-    """A file written without statistics and a file whose column is all
-    null (stats without min/max) must both be KEPT — never a crash, never
-    a dropped row."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from weather_data_warehouse_aws_spark.operators.file_index import (
-        prune_files_by_range,
-        read_with_range,
-    )
-
-    path = str(tmp_path_factory.mktemp("statless")) + "/t"
-    import os
-
-    os.makedirs(path)
-    pq.write_table(
-        pa.table({"v": [1, 2, 3], "t": ["a", "b", "c"]}),
-        f"{path}/with_stats.parquet",
-    )
-    pq.write_table(
-        pa.table({"v": [150, 160, 170], "t": ["x", "y", "z"]}),
-        f"{path}/no_stats.parquet",
-        write_statistics=False,
-    )
-    pq.write_table(
-        pa.table({"v": pa.array([None, None], type=pa.int64()), "t": ["n", "n"]}),
-        f"{path}/all_null.parquet",
-    )
-    cand = prune_files_by_range(path, "v", 100, 200)
-    # statless + all-null kept unconditionally; the stats file prunes out
-    assert any("no_stats" in f for f in cand)
-    assert any("all_null" in f for f in cand)
-    assert not any("with_stats" in f for f in cand)
-    got = read_with_range(spark, path, "v", 100, 200)
-    assert sorted(r.v for r in got.collect()) == [150, 160, 170]
-
-
-def test_range_pruning_partitioned_layout(spark, sf_smoke_dir, tmp_path_factory):
-    """Hive-partitioned tables: nested data files are found, partition
-    columns survive via basePath, and the bloom sidecar dir is skipped."""
-    from weather_data_warehouse_aws_spark.operators.file_index import (
-        build_bloom_index,
-        prune_files_by_range,
-        read_with_range,
-    )
-
-    path = str(tmp_path_factory.mktemp("hive")) + "/t"
-    docs = load_table(spark, sf_smoke_dir, "documents").withColumn(
-        "bucket", (F.col("doc_id") % 4).cast("int")
-    )
-    docs.write.partitionBy("bucket").parquet(path)
-    build_bloom_index(spark, path, "doc_id")  # sidecar must not poison listing
-
-    got = read_with_range(spark, path, "doc_id", 100, 149)
-    want = spark.read.parquet(path).filter(F.col("doc_id").between(100, 149))
-    assert sorted(map(str, got.select(sorted(got.columns)).collect())) == sorted(
-        map(str, want.select(sorted(want.columns)).collect())
-    )
-    assert "bucket" in got.columns  # partition column reconstructed
-    # filtering on the partition column itself: no footer stats -> all kept
-    files = prune_files_by_range(path, "bucket", 2, 2)
-    assert len(files) == len(prune_files_by_range(path, "doc_id", None, None))
-
-
 def test_incremental_index_update(spark, sf_smoke_dir, tmp_path_factory):
     """update_bloom_index scans only appended files: old index rows are
     reused verbatim, new keys become findable, and a no-op update leaves
@@ -294,3 +200,32 @@ def test_bloom_index_composes_with_tx_tables(spark, tmp_path_factory):
     update_bloom_index(spark, t, "doc_id")
     assert read_with_index(spark, t, "doc_id", 9999).count() == 1
     assert tx_read(spark, t).count() == 200  # 200 - erased 1 + appended 1
+
+
+def test_cli_lookup_on_renamed_log_column(spark, tmp_path_factory, capsys):
+    """`index --lookup` parses the probe literal with the column's LOGGED
+    type: after a rename on a column-mapped log table the physical footers
+    still carry the old name, and the lookup must still find the row."""
+    from pyspark.sql import Row
+
+    from weather_data_warehouse_aws_spark.__main__ import main
+    from weather_data_warehouse_aws_spark.operators.txlog import (
+        tx_append,
+        tx_rename_column,
+    )
+
+    t = str(tmp_path_factory.mktemp("btab_cli")) + "/t"
+    df = spark.createDataFrame(
+        [Row(id=i, v=i * 0.5) for i in range(40)], "id long, v double"
+    )
+    tx_append(df.repartition(4, "id"), t)
+    tx_rename_column(t, "id", "key")
+
+    assert main(["index", "--table", t, "--column", "key"]) == 0
+    assert "indexed 4 files on key" in capsys.readouterr().out
+    assert main(["index", "--table", t, "--column", "key", "--lookup", "7"]) == 0
+    out = capsys.readouterr().out
+    assert "candidate files: 1" in out
+    rows = [ln.split("|")[1:3] for ln in out.splitlines() if ln.startswith("|")]
+    assert [c.strip() for c in rows[0]] == ["key", "v"]
+    assert [[c.strip() for c in r] for r in rows[1:]] == [["7", "3.5"]]

@@ -1,111 +1,54 @@
-"""Compaction: file counts drop, rows and values don't change."""
+"""Maintenance on the transaction log. Clustered compaction leaves
+per-file key ranges narrow enough for footer stats to skip files. Erasure
+rewrites only the files that carry an erase key, partition layout and NULL
+keys survive, and the Bloom point index keeps answering lookups
+afterwards."""
 
 from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
-from weather_data_warehouse_aws_spark.operators.maintenance import (
-    compact_partitions,
-    list_partitions,
-    recover_compaction,
+from weather_data_warehouse_aws_spark.operators.txlog import (
+    tx_append,
+    tx_compact,
+    tx_erase_keys,
+    tx_read,
+    tx_snapshot,
 )
 from weather_data_warehouse_aws_spark.sources.tables import load_table
 
 
-def test_compaction_preserves_data(spark, sf_smoke_dir, tmp_path_factory):
-    out = str(tmp_path_factory.mktemp("compact")) + "/events"
-    ev = load_table(spark, sf_smoke_dir, "events").withColumn(
-        "day", F.to_date("ts")
-    )
-    # simulate many small appended files per partition
-    ev.repartition(12).write.partitionBy("day").mode("overwrite").parquet(out)
-
-    before_rows = spark.read.parquet(out).count()
-    before_sum = spark.read.parquet(out).agg(F.sum("value")).collect()[0][0]
-    parts = list_partitions(out)
-    assert parts, "expected hive partitions"
-    files_before = {
-        p: len([f for f in os.listdir(os.path.join(out, p)) if f.endswith(".parquet")])
-        for p in parts
-    }
-    assert max(files_before.values()) > 1
-
-    results = compact_partitions(spark, out, target_files=1)
-    assert results, "nothing compacted"
-    for p, (b, a) in results.items():
-        assert a == 1 and b > 1, (p, b, a)
-
-    after = spark.read.parquet(out)
-    assert after.count() == before_rows
-    assert abs(after.agg(F.sum("value")).collect()[0][0] - before_sum) < 1e-6
-    # partition layout intact → pruning still works
-    one_day = parts[0].split("=", 1)[1]
-    pruned = after.filter(F.col("day") == one_day)
-    assert pruned.count() > 0
-
-
-def test_compaction_crash_recovery(spark, sf_smoke_dir, tmp_path_factory):
-    """Every interrupted-swap state must repair on the next run with no data
-    loss and no bogus partition visible to discovery."""
-    import shutil
-
-    out = str(tmp_path_factory.mktemp("crash")) + "/events"
-    ev = load_table(spark, sf_smoke_dir, "events").withColumn("day", F.to_date("ts"))
-    ev.repartition(6).write.partitionBy("day").mode("overwrite").parquet(out)
-    before_rows = spark.read.parquet(out).count()
-    parts = list_partitions(out)
-    stage = out + "__compact_stage"
-
-    # state (a): stale tmp output, original intact
-    os.makedirs(os.path.join(stage, parts[0]))
-    # state (b): partition moved out, replacement never moved in
-    os.rename(os.path.join(out, parts[1]), os.path.join(stage, parts[1] + "__old"))
-    # state (c): replacement in place, old copy undeleted
-    shutil.copytree(os.path.join(out, parts[2]), os.path.join(stage, parts[2] + "__old"))
-
-    actions = recover_compaction(out)
-    assert len(actions) == 3
-    assert not os.path.exists(stage), "stage dir must be cleaned up"
-    assert list_partitions(out) == parts, "all partitions restored, none extra"
-    assert spark.read.parquet(out).count() == before_rows
-
-    # compaction after recovery works and is itself re-runnable
-    results = compact_partitions(spark, out, target_files=1)
-    assert results
-    assert spark.read.parquet(out).count() == before_rows
-    assert compact_partitions(spark, out, target_files=1) == {}
+def _file_ranges(table, col):
+    """Per-live-file [min, max] of `col` from the commit-recorded stats."""
+    snap = tx_snapshot(table)
+    return [tuple(snap["stats"][rel]["cols"][col][:2]) for rel in snap["files"]]
 
 
 def test_write_sorted_produces_disjoint_key_ranges(spark, sf_dir, tmp_path_factory):
-    """Clustered layout: per-file [min,max] of the sort key must be pairwise
-    disjoint (this is what lets parquet footer stats skip files); an
-    unsorted write of the same data must NOT have that property."""
-    from weather_data_warehouse_aws_spark.operators.maintenance import (
-        file_key_ranges,
-        write_sorted,
-    )
-    from weather_data_warehouse_aws_spark.sources.tables import load_table
-
+    """Clustered layout: after tx_compact(sort_by=...) the live files'
+    [min,max] of the sort key must be pairwise disjoint (this is what lets
+    footer stats skip files); the hash-partitioned append it replaced must
+    NOT have that property."""
     ev = load_table(spark, sf_dir, "events").select("event_id", "ts", "user_id", "value")
 
-    sorted_dir = str(tmp_path_factory.mktemp("ev_sorted"))
-    write_sorted(ev, sorted_dir, ["user_id"], n_files=6)
-    ranges = sorted(file_key_ranges(sorted_dir, "user_id"))
+    t = str(tmp_path_factory.mktemp("ev_sorted")) + "/events"
+    tx_append(ev.repartition(6), t)
+    u = sorted(_file_ranges(t, "user_id"))
+    overlaps = sum(1 for (a, b), (c, d) in zip(u, u[1:]) if b > c)
+    assert overlaps > 0, "hash-partitioned files were accidentally disjoint"
+
+    assert tx_compact(spark, t, target_files=6, sort_by=["user_id"]) is not None
+    ranges = sorted(_file_ranges(t, "user_id"))
     assert len(ranges) >= 4
     for (lo1, hi1), (lo2, hi2) in zip(ranges, ranges[1:]):
         assert hi1 <= lo2, f"overlapping file ranges {(lo1, hi1)} vs {(lo2, hi2)}"
 
-    unsorted_dir = str(tmp_path_factory.mktemp("ev_unsorted"))
-    ev.repartition(6).write.mode("overwrite").parquet(unsorted_dir)
-    u = sorted(file_key_ranges(unsorted_dir, "user_id"))
-    overlaps = sum(1 for (a, b), (c, d) in zip(u, u[1:]) if b > c)
-    assert overlaps > 0, "hash-partitioned files were accidentally disjoint"
-
     # content is unchanged by the re-layout
     assert (
-        spark.read.parquet(sorted_dir).orderBy("event_id").collect()
+        tx_read(spark, t).orderBy("event_id").collect()
         == ev.orderBy("event_id").collect()
     )
 
@@ -115,13 +58,6 @@ def test_write_zorder_narrows_ranges_on_both_dimensions(spark, sf_dir, tmp_path_
     the global span on BOTH clustered columns — the multi-dimensional
     skipping property a single-column sort cannot provide (its second
     column spans ~everything in every file). Content must be unchanged."""
-    from weather_data_warehouse_aws_spark.operators.maintenance import (
-        file_key_ranges,
-        write_sorted,
-        write_zorder,
-    )
-    from weather_data_warehouse_aws_spark.sources.tables import load_table
-
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "user_id", "value"
     )
@@ -131,18 +67,20 @@ def test_write_zorder_narrows_ranges_on_both_dimensions(spark, sf_dir, tmp_path_
     uspan = stats[1] - stats[0]
     vspan = stats[3] - stats[2]
 
-    def mean_span(path, col, width):
-        rng = file_key_ranges(path, col)
+    def mean_span(table, col, width):
+        rng = _file_ranges(table, col)
         assert len(rng) >= 8
         return sum((hi - lo) for lo, hi in rng) / len(rng) / width
 
-    zdir = str(tmp_path_factory.mktemp("ev_zorder"))
-    write_zorder(ev, zdir, ["user_id", "value"], n_files=16)
-    zu, zv = mean_span(zdir, "user_id", uspan), mean_span(zdir, "value", vspan)
+    z = str(tmp_path_factory.mktemp("ev_zorder")) + "/events"
+    tx_append(ev.repartition(16), z)
+    assert tx_compact(spark, z, target_files=16, zorder_by=["user_id", "value"])
+    zu, zv = mean_span(z, "user_id", uspan), mean_span(z, "value", vspan)
 
-    sdir = str(tmp_path_factory.mktemp("ev_single"))
-    write_sorted(ev, sdir, ["user_id"], n_files=16)
-    su, sv = mean_span(sdir, "user_id", uspan), mean_span(sdir, "value", vspan)
+    s = str(tmp_path_factory.mktemp("ev_single")) + "/events"
+    tx_append(ev.repartition(16), s)
+    assert tx_compact(spark, s, target_files=16, sort_by=["user_id"])
+    su, sv = mean_span(s, "user_id", uspan), mean_span(s, "value", vspan)
 
     # single-col sort: first col razor-thin, second col still wide
     assert su < 0.2 and sv > 0.5, (su, sv)
@@ -152,100 +90,67 @@ def test_write_zorder_narrows_ranges_on_both_dimensions(spark, sf_dir, tmp_path_
     assert max(zu, zv) < 0.75 * max(su, sv)
 
     assert (
-        spark.read.parquet(zdir).orderBy("event_id").collect()
+        tx_read(spark, z).orderBy("event_id").collect()
         == ev.orderBy("event_id").collect()
     )
 
 
-def test_zorder_key_temporal_and_unsupported_types(spark):
-    """Timestamp/date columns cluster via epoch conversion; strings raise a
-    descriptive TypeError up front (not a float() crash mid-plan)."""
-    import datetime as dt
-
-    import pytest
-
-    from weather_data_warehouse_aws_spark.operators.maintenance import zorder_key
-
-    df = spark.createDataFrame(
-        [
-            (1.0, dt.datetime(2024, 1, 1), dt.date(2024, 1, 1), "a"),
-            (9.0, dt.datetime(2024, 6, 1), dt.date(2024, 6, 1), "b"),
-        ],
-        "x double, ts timestamp, d date, s string",
-    )
-    out, key = zorder_key(df, ["x", "ts", "d"], bits=4)
-    zs = [r[key] for r in out.collect()]
-    assert len(set(zs)) == 2 and all(z >= 0 for z in zs)
-
-    with pytest.raises(TypeError, match="unsupported type"):
-        zorder_key(df, ["x", "s"])
-
-
 def test_erase_keys_bloom_pruned(spark, sf_smoke_dir, tmp_path_factory):
-    """Erasure removes exactly the target rows, rewrites only candidate
-    files (untouched files keep their mtimes), and the refreshed Bloom
-    index still serves lookups."""
-    import glob
-    import os
-
-    from pyspark.sql import functions as F
-
+    """Erasure removes exactly the target rows, rewrites only the files
+    that hold them (every other live file is reused by the commit), and
+    the Bloom index built before the erase still serves lookups with no
+    false negatives."""
     from weather_data_warehouse_aws_spark.operators.file_index import (
         build_bloom_index,
+        prune_files,
         read_with_index,
     )
-    from weather_data_warehouse_aws_spark.operators.maintenance import erase_keys
-    from weather_data_warehouse_aws_spark.sources.tables import load_table
 
-    path = str(tmp_path_factory.mktemp("erase")) + "/t"
+    t = str(tmp_path_factory.mktemp("erase")) + "/t"
     docs = load_table(spark, sf_smoke_dir, "documents").select("doc_id", "text")
-    docs.repartition(16, "doc_id").write.parquet(path)
-    build_bloom_index(spark, path, "doc_id", fpr=0.001)
-    before = {
-        f: os.path.getmtime(f) for f in glob.glob(os.path.join(path, "*.parquet"))
+    tx_append(docs.repartition(16, "doc_id"), t)
+    build_bloom_index(spark, t, "doc_id", fpr=0.001)
+    before = set(tx_snapshot(t)["files"])
+    n_before = tx_read(spark, t).count()
+    # the index names the files holding the keys: the erase must rewrite
+    # those and nothing else (hash-partitioned: 3 keys in ≤3 files)
+    hit = {
+        f for k in (7, 123, 400) for f in prune_files(spark, t, "doc_id", k)
     }
-    n_before = spark.read.parquet(path).count()
 
-    stats = erase_keys(spark, path, "doc_id", [7, 123, 400])
+    stats = tx_erase_keys(spark, t, "doc_id", [7, 123, 400])
     assert stats["rows_removed"] == 3
-    # hash-partitioned on doc_id: 3 keys live in ≤3 files (+rare FP)
-    assert 1 <= stats["files_rewritten"] <= 4
+    assert 1 <= stats["files_rewritten"] <= 3
 
-    after = spark.read.parquet(path)
+    after = tx_read(spark, t)
     assert after.count() == n_before - 3
     assert after.filter(F.col("doc_id").isin(7, 123, 400)).count() == 0
-    # untouched files byte-identical
-    untouched = 0
-    for f, mt in before.items():
-        if os.path.exists(f):
-            assert os.path.getmtime(f) == mt
-            untouched += 1
-    assert untouched >= 12
-    # index still no-false-negative after the refresh
-    assert read_with_index(spark, path, "doc_id", 8).count() == 1
-    assert read_with_index(spark, path, "doc_id", 7).count() == 0
+    rewritten = before - set(tx_snapshot(t)["files"])
+    assert len(rewritten) == stats["files_rewritten"]
+    assert {os.path.join(t, f) for f in rewritten} <= hit
+    assert len(before) - len(rewritten) >= 13
+    # index still no-false-negative after the erase
+    assert read_with_index(spark, t, "doc_id", 8).count() == 1
+    assert read_with_index(spark, t, "doc_id", 7).count() == 0
 
 
 def test_erase_keys_partitioned_table(spark, tmp_path_factory):
     """Hive-partitioned table: partition columns survive the rewrite and
     rows land back in their partitions."""
-    from pyspark.sql import functions as F
-
-    from weather_data_warehouse_aws_spark.operators.maintenance import erase_keys
-
-    path = str(tmp_path_factory.mktemp("erasep")) + "/t"
+    t = str(tmp_path_factory.mktemp("erasep")) + "/t"
     df = spark.createDataFrame(
         [(i, f"p{i % 3}", i * 10) for i in range(30)], "k int, part string, v int"
     )
-    df.write.partitionBy("part").parquet(path)
-    stats = erase_keys(spark, path, "k", [4, 17])
+    tx_append(df, t, partition_by=["part"])
+    stats = tx_erase_keys(spark, t, "k", [4, 17])
     assert stats["rows_removed"] == 2
-    back = spark.read.parquet(path)
+    assert stats["files_rewritten"] == 2  # k=4 in p1, k=17 in p2; p0 kept
+    assert all(f.startswith("part=") for f in tx_snapshot(t)["files"])
+    back = tx_read(spark, t)
     assert back.count() == 28
     assert back.filter(F.col("k").isin(4, 17)).count() == 0
     assert {r.part for r in back.select("part").distinct().collect()} == {"p0", "p1", "p2"}
-    # values re-readable per partition (layout intact)
-    assert back.filter("part = 'p1'").count() == 9  # 10 minus k=4... k%3: 4->p1, 17->p2
+    assert back.filter("part = 'p1'").count() == 9  # 10 minus k=4 (4 % 3 = 1)
 
 
 def test_erase_keys_none_in_values_is_safe(spark, tmp_path_factory):
@@ -253,105 +158,21 @@ def test_erase_keys_none_in_values_is_safe(spark, tmp_path_factory):
     row — unguarded, an erase list containing None would wipe the table.
     None is stripped (NULL is never an erase target); an all-None batch
     raises; a literally-empty batch is a no-op."""
-    import pytest
-    from pyspark.sql import functions as F
-
-    from weather_data_warehouse_aws_spark.operators.maintenance import erase_keys
-
-    path = str(tmp_path_factory.mktemp("erasen")) + "/t"
+    t = str(tmp_path_factory.mktemp("erasen")) + "/t"
     df = spark.createDataFrame(
         [(i, i * 10) for i in range(20)] + [(None, 999)], "k int, v int"
     )
-    df.repartition(4).write.parquet(path)
+    tx_append(df.repartition(4), t)
 
-    stats = erase_keys(spark, path, "k", [3, None, 11])
+    stats = tx_erase_keys(spark, t, "k", [3, None, 11])
     assert stats["rows_removed"] == 2  # only 3 and 11; everything else KEPT
-    back = spark.read.parquet(path)
+    back = tx_read(spark, t)
     assert back.count() == 19
     assert back.filter(F.col("k").isNull()).count() == 1  # NULL row survives
 
     with pytest.raises(ValueError, match="only None"):
-        erase_keys(spark, path, "k", [None, None])
-    assert erase_keys(spark, path, "k", []) == {
-        "files_rewritten": 0, "rows_removed": 0,
+        tx_erase_keys(spark, t, "k", [None, None])
+    assert tx_erase_keys(spark, t, "k", []) == {
+        "version": None, "files_rewritten": 0, "rows_removed": 0,
     }
-    assert spark.read.parquet(path).count() == 19
-
-
-def test_recover_erase_completes_interrupted_run(spark, tmp_path_factory):
-    """A crash after the manifest is durable: recovery must finish the
-    moves, delete the originals, and leave the table consistent."""
-    import json
-    import os
-    import shutil
-
-    from weather_data_warehouse_aws_spark.operators.maintenance import (
-        _stage_root,
-        recover_erase,
-    )
-
-    path = str(tmp_path_factory.mktemp("erase_cr")) + "/t"
-    df = spark.createDataFrame([(i, i * 10) for i in range(20)], "k int, v int")
-    df.repartition(4, "k").write.parquet(path)
-    files = sorted(
-        os.path.join(path, f) for f in os.listdir(path) if f.endswith(".parquet")
-    )
-    victim = files[0]
-    n_victim = spark.read.parquet(victim).count()
-
-    # simulate: survivors staged (victim rows minus one key), manifest
-    # written, crash before moves/deletes
-    stage = _stage_root(path)
-    os.makedirs(stage, exist_ok=True)
-    erased_key = spark.read.parquet(victim).first()["k"]
-    staged = os.path.join(stage, "erase_out")
-    spark.read.parquet(victim).filter(f"k != {erased_key}").coalesce(1).write.parquet(staged)
-    part = [f for f in os.listdir(staged) if f.endswith(".parquet")][0]
-    manifest = {
-        "moves": [[os.path.join(staged, part), os.path.join(path, "recovered-" + part)]],
-        "deletes": [victim],
-    }
-    with open(os.path.join(path, "_erase_pending.json"), "w") as f:
-        json.dump(manifest, f)
-
-    assert recover_erase(path) is True
-    back = spark.read.parquet(path)
-    assert back.count() == 20 - 1
-    assert back.filter(f"k = {erased_key}").count() == 0
-    assert not os.path.exists(victim)
-    assert not os.path.exists(os.path.join(path, "_erase_pending.json"))
-    # idempotent: second recovery is a no-op
-    assert recover_erase(path) is False
-
-
-def test_vacuum_orphans_and_evolved_read(spark, tmp_path_factory):
-    """Vacuum removes staging debris + zero-byte parts and nothing else;
-    mergeSchema read null-extends pre-evolution files."""
-    import os
-
-    from weather_data_warehouse_aws_spark.operators.maintenance import vacuum_orphans
-    from weather_data_warehouse_aws_spark.sources.text_formats import read_evolved
-
-    path = str(tmp_path_factory.mktemp("vac")) + "/t"
-    spark.createDataFrame([(1, "a")], "k int, s string").write.parquet(path)
-    spark.createDataFrame(
-        [(2, "b", 9.5)], "k int, s string, extra double"
-    ).write.mode("append").parquet(path)
-
-    os.makedirs(os.path.join(path, "_temporary", "0"))
-    os.makedirs(os.path.join(path, ".spark-staging-abc"))
-    open(os.path.join(path, "part-junk.parquet"), "w").close()  # zero bytes
-    before_live = {
-        f for f in os.listdir(path)
-        if f.endswith(".parquet") and os.path.getsize(os.path.join(path, f)) > 0
-    }
-
-    removed = vacuum_orphans(path)
-    assert len(removed) == 3
-    after = set(os.listdir(path))
-    assert "_temporary" not in after and ".spark-staging-abc" not in after
-    assert "part-junk.parquet" not in after
-    assert before_live <= after  # live files untouched
-
-    rows = {r.k: r.extra for r in read_evolved(spark, path).collect()}
-    assert rows == {1: None, 2: 9.5}  # old file null-extended
+    assert tx_read(spark, t).count() == 19

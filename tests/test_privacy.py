@@ -109,10 +109,14 @@ def test_gdpr_playbook_end_to_end(spark, tmp_path_factory):
     2. erasure request: `forget_tokens` drops the identity from the
        vault (crypto-erasure, instant, no data rewrite);
     3. when policy additionally demands physical removal of the rows,
-       `erase_keys` Bloom-prunes and rewrites ONLY the files carrying
-       that token.
+       `tx_erase_keys` stats-prunes and rewrites ONLY the files carrying
+       that token, in one log commit.
     """
-    from weather_data_warehouse_aws_spark.operators.maintenance import erase_keys
+    from weather_data_warehouse_aws_spark.operators.txlog import (
+        tx_append,
+        tx_erase_keys,
+        tx_read,
+    )
 
     events = spark.createDataFrame(
         [(i, ["alice@example.com", "bob@example.com", "carol@example.com"][i % 3], i * 10)
@@ -125,20 +129,21 @@ def test_gdpr_playbook_end_to_end(spark, tmp_path_factory):
     )
 
     path = str(tmp_path_factory.mktemp("gdpr")) + "/events"
-    tok.repartition(8, "email").write.parquet(path)
+    tx_append(tok.repartition(8, "email"), path)
 
     # step 2: crypto-erasure — restore works for others, not for alice
     vault["email"] = forget_tokens(vault["email"], ["alice@example.com"])
-    restored = depseudonymize(spark.read.parquet(path), vault)
+    restored = depseudonymize(tx_read(spark, path), vault)
     assert restored.filter(F.col("email") == "bob@example.com").count() == 20
     assert restored.filter(F.col("email") == "alice@example.com").count() == 0
     # aggregates over the forgotten identity still consistent (tokens intact)
-    assert spark.read.parquet(path).groupBy("email").count().count() == 3
+    assert tx_read(spark, path).groupBy("email").count().count() == 3
 
     # step 3: physical removal of the rows themselves
-    stats = erase_keys(spark, path, "email", [alice_token])
+    stats = tx_erase_keys(spark, path, "email", [alice_token])
     assert stats["rows_removed"] == 20
-    back = spark.read.parquet(path)
+    assert stats["files_rewritten"] == 1  # hash-partitioned on the token
+    back = tx_read(spark, path)
     assert back.count() == 40
     assert back.filter(F.col("email") == alice_token).count() == 0
 

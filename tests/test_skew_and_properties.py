@@ -482,28 +482,26 @@ _erase_rows = st.lists(
 )
 @_SETTINGS
 def test_erase_keys_fuzz_matches_filter(spark, tmp_path_factory, rows, erase, with_nulls):
-    """erase_keys over random partitioned tables ≡ a plain filter of the
-    same rows — including NULL keys (always kept), erase values absent
-    from the table, and a batch that wipes EVERY row (the documented
-    schema-on-read corner: the emptied table dir has no footers left to
-    infer from, so the read-back must supply the schema explicitly)."""
-    from weather_data_warehouse_aws_spark.operators.maintenance import erase_keys
+    """tx_erase_keys over random partitioned log tables ≡ a plain filter
+    of the same rows — including NULL keys (always kept), erase values
+    absent from the table, and a batch that wipes EVERY row (the emptied
+    table keeps its schema through the log)."""
+    from weather_data_warehouse_aws_spark.operators.txlog import (
+        tx_append,
+        tx_erase_keys,
+        tx_read,
+    )
 
     data = [(k, p, v) for k, p, v in rows]
     if with_nulls:
         data.append((None, "p0", 99))
     path = str(tmp_path_factory.mktemp("erase_fz")) + "/t"
     df = spark.createDataFrame(data, "k int, part string, v int")
-    df.write.partitionBy("part").parquet(path)
+    tx_append(df, path, partition_by=["part"])
 
-    stats = erase_keys(spark, path, "k", sorted(erase))
+    stats = tx_erase_keys(spark, path, "k", sorted(erase))
     got = sorted(
-        (
-            (r.k, r.part, r.v)
-            for r in spark.read.schema("k int, v int, part string")
-            .parquet(path)
-            .collect()
-        ),
+        ((r.k, r.part, r.v) for r in tx_read(spark, path).collect()),
         key=str,
     )
     want = sorted(

@@ -119,6 +119,21 @@ def test_jsonl_failfast_on_corrupt_record(spark, tmp_path_factory):
         read_jsonl(spark, path, _parse_datatype_string(schema)).collect()
 
 
+def test_read_evolved_null_extends_old_files(spark, tmp_path_factory):
+    """mergeSchema read of a directory whose later files added a column:
+    the pre-evolution file is null-extended, not dropped."""
+    from weather_data_warehouse_aws_spark.sources.text_formats import read_evolved
+
+    path = str(tmp_path_factory.mktemp("evolved")) + "/t"
+    spark.createDataFrame([(1, "a")], "k int, s string").write.parquet(path)
+    spark.createDataFrame(
+        [(2, "b", 9.5)], "k int, s string, extra double"
+    ).write.mode("append").parquet(path)
+
+    rows = {r.k: r.extra for r in read_evolved(spark, path).collect()}
+    assert rows == {1: None, 2: 9.5}  # old file null-extended
+
+
 def test_double_fidelity_extremes(spark, tmp_path_factory):
     vals = [0.1, 1 / 3, math.pi, 2.2250738585072014e-308, 1.7976931348623157e308,
             -0.0, 123456789.123456789]

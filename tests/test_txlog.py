@@ -455,8 +455,7 @@ def test_checkpoint_folds_stats_and_txns(spark, tmp_path):
     assert tx_append(_mk(spark, [999]), t, txn=("loader", 3)) is None
 
 
-def test_parquet_checkpoint_rich_state_mixed_eras(spark, tmp_path,
-                                                  monkeypatch):
+def test_parquet_checkpoint_rich_state_mixed_eras(spark, tmp_path):
     """The parquet checkpoint (columnar live set + table state in footer
     KV metadata) must fold EVERY piece of versioned state identically to
     a scratch replay — partition scheme, footer stats, deletion vectors,
@@ -501,15 +500,23 @@ def test_parquet_checkpoint_rich_state_mixed_eras(spark, tmp_path,
     assert with_cp["constraints"] == {"v_nonneg": "val >= 0"}
 
     # json era resumes (a pre-round-9 writer): checkpoint at v20 is json
-    monkeypatch.setattr(_tx, "CHECKPOINT_FORMAT", "json")
-    for _ in range(CHECKPOINT_INTERVAL):                 # v14..v23
+    v20 = 2 * CHECKPOINT_INTERVAL
+    for _ in range(CHECKPOINT_INTERVAL - 3):             # v14..v20
         tx_append(row, t, partition_by=["grp"])
-    cp_js = os.path.join(
-        log, f"{2 * CHECKPOINT_INTERVAL:020d}.checkpoint.json"
+    cp_js = os.path.join(log, f"{v20:020d}.checkpoint.json")
+    state = {**_tx._replay(t, v20), "version": v20}
+    os.remove(os.path.join(log, f"{v20:020d}.checkpoint.parquet"))
+    assert _tx.get_log_store(t).put_if_absent(
+        log, os.path.basename(cp_js),
+        json.dumps({k: state.get(k) for k in
+                    (*_tx._CP_STATE_KEYS, "files", "stats", "dvs")}),
     )
-    assert os.path.exists(cp_js)
+    from_js = _tx._load_checkpoint(t, v20)
+    assert from_js["files"] == state["files"]
+    assert from_js["column_map"] == {"val": "v"}
+    for _ in range(3):                                   # v21..v23
+        tx_append(row, t, partition_by=["grp"])
     # ...and a parquet re-checkpoint of the SAME version coexists
-    monkeypatch.setattr(_tx, "CHECKPOINT_FORMAT", "parquet")
     _tx._write_checkpoint(
         _tx.get_log_store(t), t, 2 * CHECKPOINT_INTERVAL
     )
@@ -1183,6 +1190,28 @@ def test_clustered_compaction_restores_skipping(spark, tmp_path):
     assert tx_read(spark, t).count() == 4000
 
 
+def test_zorder_key_temporal_and_unsupported_types(spark):
+    """Timestamp/date columns cluster via epoch conversion; strings raise a
+    descriptive TypeError up front (not a float() crash mid-plan)."""
+    import datetime as dt
+
+    from weather_data_warehouse_aws_spark.operators.txlog import zorder_key
+
+    df = spark.createDataFrame(
+        [
+            (1.0, dt.datetime(2024, 1, 1), dt.date(2024, 1, 1), "a"),
+            (9.0, dt.datetime(2024, 6, 1), dt.date(2024, 6, 1), "b"),
+        ],
+        "x double, ts timestamp, d date, s string",
+    )
+    out, key = zorder_key(df, ["x", "ts", "d"], bits=4)
+    zs = [r[key] for r in out.collect()]
+    assert len(set(zs)) == 2 and all(z >= 0 for z in zs)
+
+    with pytest.raises(TypeError, match="unsupported type"):
+        zorder_key(df, ["x", "s"])
+
+
 def test_cli_tx_restore_and_changes(spark, tmp_path, capsys):
     from weather_data_warehouse_aws_spark.__main__ import main
 
@@ -1795,6 +1824,50 @@ def test_prune_ops_in_isnull_notnull(spark, tmp_path):
         t2, [("d", "in", [dt.date(2024, 1, 1), dt.date(2024, 1, 2)])]
     )
     assert len(k_in) == 2
+
+
+def test_doctor_is_read_only(spark, tmp_path, capsys):
+    """`doctor` only reports. On a log table carrying every state it
+    inspects — deletion vectors, a checkpoint, log entries below the
+    retention floor, write debris a `tx vacuum` would sweep — a run leaves
+    the table's file listing, `_txn_log` included, byte-for-byte
+    unchanged."""
+    import hashlib
+
+    from weather_data_warehouse_aws_spark.__main__ import main
+    from weather_data_warehouse_aws_spark.operators.txlog import tx_delete_where
+
+    t = str(tmp_path / "t")
+    tx_append(_mk(spark, range(100)).repartition(4), t)
+    for k in range(CHECKPOINT_INTERVAL):
+        tx_append(_mk(spark, [1000 + k]), t)
+    tx_delete_where(spark, t, "id < 10")
+    tx_vacuum(t, retain_versions=1)
+    os.makedirs(os.path.join(t, "_temporary", "0"))
+    open(os.path.join(t, "part-junk.parquet"), "w").close()
+
+    def listing():
+        roots = [str(tmp_path)]
+        bucket = getattr(get_data_store(t), "bucket", None)
+        if bucket:
+            roots.append(bucket)
+        out = {}
+        for root in roots:
+            for d, dirs, names in os.walk(root):
+                out.update({os.path.join(d, n): None for n in dirs})
+                for n in names:
+                    with open(os.path.join(d, n), "rb") as fh:
+                        out[os.path.join(d, n)] = hashlib.sha256(
+                            fh.read()).hexdigest()
+        return out
+
+    before = listing()
+    assert any("_txn_log" in p for p in before)
+    assert main(["doctor", "--table", t, "--skew-col", "id"]) == 0
+    out = capsys.readouterr().out
+    assert "logically-deleted row(s)" in out
+    assert "below the retention floor" in out
+    assert listing() == before
 
 
 def test_doctor_reports_dv_debt_and_compaction_clears_it(spark, tmp_path, capsys):

@@ -87,9 +87,9 @@ def main(argv: list[str] | None = None) -> int:
 
     dr = sub.add_parser(
         "doctor",
-        help="table health: vacuum write debris, report partition balance "
-        "and key skew, list index sidecars; on transaction-log tables "
-        "also deletion-vector debt + compaction recommendation",
+        help="read-only table health report: partition balance and key "
+        "skew, index sidecars; on transaction-log tables also "
+        "deletion-vector debt + compaction recommendation",
     )
     dr.add_argument("--table", required=True)
     dr.add_argument("--skew-col", default=None, help="report top-5 heavy values")
@@ -361,6 +361,7 @@ def main(argv: list[str] | None = None) -> int:
 
     if args.cmd == "index":
         from .operators.file_index import (
+            _table_df,
             build_bloom_index,
             prune_files,
             read_with_index,
@@ -370,8 +371,9 @@ def main(argv: list[str] | None = None) -> int:
             idx = build_bloom_index(spark, args.table, args.column, fpr=args.fpr)
             print(f"indexed {idx.count()} files on {args.column}")
             return 0
-        # parse the lookup literal with the column's own type
-        dtype = spark.read.parquet(args.table).schema[args.column].dataType
+        # parse the lookup literal with the column's own type (the logged
+        # schema on a tx table: physical footers may carry a mapped name)
+        dtype = _table_df(spark, args.table).schema[args.column].dataType
         value: object = args.lookup
         if dtype.simpleString() in ("bigint", "int", "smallint", "tinyint"):
             value = int(args.lookup)
@@ -387,20 +389,8 @@ def main(argv: list[str] | None = None) -> int:
     if args.cmd == "doctor":
         import os
 
-        from .operators.maintenance import (
-            recover_compaction,
-            recover_erase,
-            vacuum_orphans,
-        )
         from .operators.skew import key_skew, partition_balance
 
-        if recover_erase(args.table):
-            print("recovered an interrupted erase run")
-        recovered = recover_compaction(args.table)
-        if recovered:
-            print(f"recovered interrupted compaction of {recovered}")
-        removed = vacuum_orphans(args.table)
-        print(f"vacuumed {len(removed)} debris path(s)")
         sidecars = [
             d for d in os.listdir(args.table) if d.startswith("_bloom_idx_")
         ]

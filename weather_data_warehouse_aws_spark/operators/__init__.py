@@ -13,7 +13,6 @@ from .dedup import (  # noqa: F401
     simhash_pairs,
 )
 from .keys import dense_key, hash_key  # noqa: F401
-from .maintenance import compact_partitions  # noqa: F401
 from .rollup_time import (  # noqa: F401
     cascade_rollup,
     distinct_rollup,

@@ -1,10 +1,11 @@
 """Per-file Bloom-filter skipping index (Delta/Iceberg bloom-index analogue
 in vanilla Spark).
 
-Sorted and Z-ordered layouts (operators/maintenance.py) make min/max footer
-stats selective for RANGE predicates on the clustering columns; they do
-nothing for point lookups on a high-cardinality column that isn't the sort
-key (user_id in a time-sorted table, doc_id in a content-ordered corpus).
+Sorted and Z-ordered layouts (`tx_compact(sort_by=/zorder_by=)` in
+operators/txlog.py) make the commit-time min/max stats selective for RANGE
+predicates on the clustering columns; they do nothing for point lookups on
+a high-cardinality column that isn't the sort key (user_id in a
+time-sorted table, doc_id in a content-ordered corpus).
 The standard answer is a per-file Bloom filter: an offline pass builds one
 KB-scale bitmap per data file over the lookup column; a point query probes
 the (tiny) index first and reads only the files that *might* contain the
@@ -409,86 +410,3 @@ def read_with_index(
         .parquet(*files)
         .filter(F.col(column) == F.lit(value))
     )
-
-
-# ---------------------------------------------------------------------------
-# Range complement: min/max footer-stats file pruning. Bloom answers point
-# lookups on any column; footer ranges answer RANGE predicates — selective
-# when the layout clusters the column (operators/maintenance.py::
-# write_sorted / write_zorder), a no-op-but-correct superset otherwise.
-# Parquet already carries these stats in every footer, so there is no index
-# to build or maintain.
-# ---------------------------------------------------------------------------
-
-
-def _data_files(table_path: str) -> list[str]:
-    """All parquet data files under the table root, recursing into hive
-    `key=value` partition dirs but never into `_`/`.`-prefixed sidecars
-    (the `_bloom_idx_*` dirs, `_SUCCESS`, hidden files) — the same listing
-    rule Spark applies."""
-    out: list[str] = []
-    for root, dirs, names in os.walk(table_path):
-        dirs[:] = sorted(d for d in dirs if not d.startswith(("_", ".")))
-        for name in sorted(names):
-            if name.endswith(".parquet") and not name.startswith(("_", ".")):
-                out.append(os.path.join(root, name))
-    return out
-
-
-def prune_files_by_range(table_path: str, column: str, lo, hi) -> list[str]:
-    """Files whose footer [min, max] for `column` intersects [lo, hi]
-    (inclusive bounds; pass None for an open end).
-
-    No-false-negative guard: a file is pruned only if EVERY row group
-    carries usable min/max stats for the column — one statless row group
-    (or an all-null chunk, where parquet writes statistics without
-    min/max) keeps the whole file, regardless of row-group order. Hive
-    partition columns live in directory names, not footers, so filtering
-    on one simply keeps every file — correct, just unpruned (partition
-    pruning is Spark's own job)."""
-    import pyarrow.parquet as pq
-
-    out: list[str] = []
-    for full in _data_files(table_path):
-        md = pq.ParquetFile(full).metadata
-        fmin = fmax = None
-        usable = True
-        seen = False
-        for rg in range(md.num_row_groups):
-            for ci in range(md.num_columns):
-                col = md.row_group(rg).column(ci)
-                if col.path_in_schema != column:
-                    continue
-                seen = True
-                st = col.statistics
-                if st is None or not st.has_min_max:
-                    usable = False
-                    break
-                fmin = st.min if fmin is None else min(fmin, st.min)
-                fmax = st.max if fmax is None else max(fmax, st.max)
-            if not usable:
-                break
-        if not (seen and usable and fmin is not None):
-            out.append(full)  # no complete stats -> cannot prune safely
-            continue
-        if (lo is None or fmax >= lo) and (hi is None or fmin <= hi):
-            out.append(full)
-    return out
-
-
-def read_with_range(
-    spark: SparkSession, table_path: str, column: str, lo, hi
-) -> DataFrame:
-    """Range scan through footer stats: read only intersecting files, then
-    apply the exact BETWEEN filter. Row-identical to the full-scan filter;
-    file count ∝ range width when the layout is clustered on `column`."""
-    files = prune_files_by_range(table_path, column, lo, hi)
-    if not files:
-        schema = spark.read.parquet(table_path).schema
-        return spark.createDataFrame([], schema)
-    df = spark.read.option("basePath", table_path).parquet(*files)
-    if lo is not None:
-        df = df.filter(F.col(column) >= F.lit(lo))
-    if hi is not None:
-        df = df.filter(F.col(column) <= F.lit(hi))
-    return df

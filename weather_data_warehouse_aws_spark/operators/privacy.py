@@ -1,7 +1,7 @@
 """Keyed pseudonymization with crypto-erasure — the REVERSIBLE privacy
 primitive that completes the GDPR toolkit next to the irreversible ones
 (functions/text.py::redact_pii masks free text in place;
-operators/maintenance.py::erase_keys physically deletes rows).
+operators/txlog.py::tx_erase_keys physically deletes rows).
 
 Pseudonymization replaces an identifier with a deterministic keyed token:
 
@@ -15,7 +15,7 @@ against the vault, and *crypto-erasure* is deleting vault rows (or
 discarding the secret) — the fact table never needs rewriting, which at
 100 TB is the entire point: forgetting one person is a KB-scale vault
 delete instead of a petabyte rewrite (that rewrite path exists too —
-`erase_keys` — for when the token itself must go).
+`tx_erase_keys` — for when the token itself must go).
 
 Construction note: sha256(secret||msg) is the textbook "secret-prefix
 MAC", length-extension caveats and all — fine here because tokens are

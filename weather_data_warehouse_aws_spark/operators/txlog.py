@@ -3,15 +3,16 @@ snapshot-isolated reads, time travel, and vacuum — the metadata layer the
 rest of the lake-maintenance family (compaction, GDPR erasure) needs to be
 safe under CONCURRENT readers and writers.
 
-Why this exists: `operators/maintenance.py` rewrites files in place
-(crash-safe via staging, but a reader that listed the directory a moment
-earlier can still race the swap), and an erasure that removes every row
-loses the table's schema with its last data file
-(`maintenance.py::erase_keys` docstring calls this out explicitly). Both
+Why this exists: rewriting a plain parquet directory in place races any
+reader that listed it a moment earlier, needs its own staging directory
+and crash-recovery protocol per operation, and an erasure that removes
+every row loses the table's schema with its last data file. All three
 are solved the way Delta Lake / Apache Iceberg solve them — public designs
 (Armbrust et al., "Delta Lake: High-Performance ACID Table Storage over
 Cloud Object Stores", VLDB 2020): the set of live data files is defined by
-an append-only JSON log, never by directory listing.
+an append-only JSON log, never by directory listing, so compaction,
+clustering and erasure are ordinary (add, remove) commits with no swap
+to recover from.
 
 Layout (all under the table root):
 
@@ -24,7 +25,7 @@ file (rel, stats_json, dvs), table-level state in the footer key-value
 metadata — so resolving a snapshot over a 10M-file table is a
 compressed columnar read, not gigabytes of JSON text parse. Readers
 accept the pre-round-9 `.checkpoint.json` spelling forever (mixed-era
-logs replay fine; `CHECKPOINT_FORMAT` flips the writer).
+logs replay fine); the writer only emits parquet.
 
 Each commit is `{"version", "op", "add": [relpath], "remove": [relpath],
 "meta": {...}}`. A snapshot at version v replays the log (from the newest
@@ -141,18 +142,22 @@ import uuid
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructField, StructType
+from pyspark.sql.types import (
+    DateType,
+    NumericType,
+    StructField,
+    StructType,
+    TimestampType,
+)
 
 CHECKPOINT_INTERVAL = 10
-# Checkpoint payload format. "parquet" (the default, Delta's published
-# design: the full live set is COLUMNAR — one row per live file, table
-# state in the footer key-value metadata) keeps checkpoint load O(columns
-# touched) and binary-compact: at millions of live files a JSON checkpoint
-# is GBs of driver-side text parse, a parquet one is a column-pruned
-# Arrow read. "json" is the pre-round-9 format; readers accept BOTH
-# forever (mixed-era logs replay fine), so flipping this constant never
-# strands a table.
-CHECKPOINT_FORMAT = "parquet"
+# Checkpoints are written as parquet (Delta's published design: the full
+# live set is COLUMNAR — one row per live file, table state in the footer
+# key-value metadata), which keeps checkpoint load O(columns touched) and
+# binary-compact: at millions of live files a JSON checkpoint is GBs of
+# driver-side text parse, a parquet one is a column-pruned Arrow read.
+# The pre-round-9 `.checkpoint.json` payload is still READ forever
+# (mixed-era logs replay fine), never written.
 _LOG_DIR = "_txn_log"
 _PAD = 20
 # strict log-entry names: anything else in _txn_log (editor backups,
@@ -173,15 +178,9 @@ _SIDECAR_RE = re.compile(r"^sc-(\d{20})-.*\.parquet$")
 # the delta, not the table. Every _SIDECAR_MAX_PARTS checkpoints the
 # chain is COMPACTED into full parts of _SIDECAR_ROWS rows (amortized
 # full-rewrite cost = table/_SIDECAR_MAX_PARTS).
-_MULTIPART_MIN = int(
-    os.environ.get("SPARK_GRAFT_CHECKPOINT_MULTIPART_MIN", "10000")
-)
-_SIDECAR_ROWS = int(
-    os.environ.get("SPARK_GRAFT_CHECKPOINT_SIDECAR_ROWS", "100000")
-)
-_SIDECAR_MAX_PARTS = int(
-    os.environ.get("SPARK_GRAFT_CHECKPOINT_MAX_PARTS", "8")
-)
+_MULTIPART_MIN = 10_000
+_SIDECAR_ROWS = 100_000
+_SIDECAR_MAX_PARTS = 8
 
 
 class TxConflict(RuntimeError):
@@ -818,15 +817,6 @@ def _write_checkpoint(store: LogStore, path: str, version: int) -> None:
     cp = _replay(path, version)
     cp = {**cp, "version": version}
     log_dir = _log_dir(path)
-    if CHECKPOINT_FORMAT != "parquet":
-        store.put_if_absent(
-            log_dir,
-            _checkpoint_name(version, "json"),
-            json.dumps({k: cp.get(k) for k in
-                        (*_CP_STATE_KEYS, "files", "stats", "dvs")}),
-        )
-        return
-
     commits, checkpoints = _list_log(path)
     prev_v = max((c for c in checkpoints if c < version), default=None)
     prev_sidecars: list[str] | None = None
@@ -1386,9 +1376,7 @@ def _str_upper_bound(s: str) -> str | None:
 # a 100k-file ingest commit must not pay 100k of them sequentially on the
 # driver (Delta collects add-file stats in the executors during the
 # write). Below it, Spark job overhead dominates — the driver loop wins.
-_STATS_DISTRIBUTED_MIN = int(
-    os.environ.get("SPARK_GRAFT_STATS_DISTRIBUTED_MIN", "64")
-)
+_STATS_DISTRIBUTED_MIN = 64
 
 
 def _file_stats(path: str, rels: list[str],
@@ -2224,9 +2212,7 @@ def _rel_home(path: str, rel: str,
 # million files must not pay a million sequential RTTs on the driver
 # (Delta's VACUUM deletes with a Spark job for the same reason). Deletes
 # are idempotent (missing = no-op), so task retries are safe.
-_DROP_DISTRIBUTED_MIN = int(
-    os.environ.get("SPARK_GRAFT_DROP_DISTRIBUTED_MIN", "256")
-)
+_DROP_DISTRIBUTED_MIN = 256
 
 
 def _drop_files(path: str, rels: list[str],
@@ -4126,6 +4112,71 @@ def tx_optimize(
     }
 
 
+def zorder_key(df, cols: list[str], *, bits: int = 8):
+    """Morton (Z-order) interleave of `cols`, each first bucketed into
+    2^bits equal-width bins between its global min and max.
+
+    Returns (df_with_bounds, key_column): the per-column min/max come from
+    ONE aggregate whose scalar results parameterize `width_bucket` — the
+    same one-extra-pass cost `repartitionByRange`'s sampler already pays.
+    Bit interleaving is a pure integer expression (JVM codegen, no UDF):
+    z = Σ_j Σ_b bit_b(bucket_j) << (b·|cols| + j), so nearby values in ANY
+    of the columns land in nearby z — the property that makes per-file
+    min/max stats narrow in every dimension at once. Nulls bucket to 0.
+
+    Column types: numeric columns bucket directly; date/timestamp columns
+    are converted to epoch numbers (days / seconds) before bucketing; any
+    other type raises a descriptive TypeError up front rather than a
+    confusing float() failure mid-plan.
+    """
+    num_expr: dict[str, str] = {}
+    for c in cols:
+        dtype = df.schema[c].dataType
+        if isinstance(dtype, NumericType):
+            num_expr[c] = f"CAST({c} AS DOUBLE)"
+        elif isinstance(dtype, TimestampType):
+            num_expr[c] = f"CAST(unix_timestamp({c}) AS DOUBLE)"
+        elif isinstance(dtype, DateType):
+            num_expr[c] = f"CAST(datediff({c}, DATE'1970-01-01') AS DOUBLE)"
+        else:
+            raise TypeError(
+                f"zorder_key: column {c!r} has unsupported type "
+                f"{dtype.simpleString()} — z-order clustering needs a numeric "
+                "or temporal axis (strings have no equal-width binning)"
+            )
+
+    # bounds are computed on the SAME numeric projection the bucketing
+    # expression uses, so temporal columns never round-trip through Python
+    # datetime (whose local-timezone interpretation could shift them)
+    aggs = []
+    for c in cols:
+        e = F.expr(num_expr[c])
+        aggs += [F.min(e).alias(f"__min_{c}"), F.max(e).alias(f"__max_{c}")]
+    bounds = df.agg(*aggs).first()  # scalar-only driver fetch (tiny)
+    n_bins = 1 << bits
+    z = F.lit(0).cast("long")
+    for j, c in enumerate(cols):
+        lo, hi = bounds[f"__min_{c}"], bounds[f"__max_{c}"]
+        if lo is None or hi is None or hi == lo:
+            continue  # constant/all-null column contributes no bits
+        bucket = (
+            F.least(
+                F.lit(n_bins - 1),
+                F.greatest(
+                    F.lit(0),
+                    F.expr(
+                        f"CAST(width_bucket({num_expr[c]}, {lo}D, "
+                        f"{hi}D, {n_bins}) AS INT) - 1"
+                    ),
+                ),
+            )
+        )
+        bucket = F.coalesce(bucket, F.lit(0))
+        for b in range(bits):
+            z = z + (F.shiftright(bucket, b).bitwiseAND(F.lit(1)).cast("long") * F.lit(1 << (b * len(cols) + j)).cast("long"))
+    return df.withColumn("__z", z), "__z"
+
+
 def tx_compact(
     spark: SparkSession,
     path: str,
@@ -4141,7 +4192,7 @@ def tx_compact(
 
     `sort_by` / `zorder_by` RE-CLUSTER during the rewrite (Delta's
     OPTIMIZE ... ZORDER BY): range-partition + sort-within-file on the
-    key (or its Morton interleave, `operators/maintenance.zorder_key`),
+    key (or its Morton interleave, `zorder_key`),
     so the per-file min/max recorded in the compaction commit become
     narrow and disjoint — this is what gives `tx_read(predicate=...)` /
     `tx_prune` / `tx_merge` / `tx_erase_keys` their file-skipping power
@@ -4170,8 +4221,6 @@ def tx_compact(
     n = max(target_files, 1)
     pby = snap["partition_by"]
     if zorder_by:
-        from .maintenance import zorder_key
-
         zdf, zkey = zorder_key(df, zorder_by)
         df = (
             zdf.repartitionByRange(n, zkey)
@@ -4214,8 +4263,8 @@ def tx_erase_keys(
     """Transactional right-to-be-forgotten: rewrite ONLY the live files
     that contain an erase key, commit (add survivors, remove candidates)
     atomically. NULL keys are never erase targets (the list is stripped of
-    None — a NULL member would 3VL-poison the keep filter into a full
-    wipe, the `erase_keys` lesson). An erasure that empties the table
+    None — a NULL member in `isin` makes the keep filter NULL for every
+    non-matching row, a full wipe). An erasure that empties the table
     keeps its schema via the log. NOTE: erased rows remain readable via
     time travel until `tx_vacuum` passes the erasure version — for GDPR,
     erase THEN vacuum with a horizon past it.
