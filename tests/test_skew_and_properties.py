@@ -221,6 +221,154 @@ def test_scd2_row_conservation(spark, n_changes):
     merged.unpersist()
 
 
+_SCD2_SCHEMA = "nk string, cc string, attr double, tz string"
+_SCD2_MODEL_COLS = [
+    "key", "nk", "cc", "attr", "tz", "version", "is_current",
+    "effective_from_date", "effective_to_date", "created_timestamp",
+    "updated_timestamp",
+]
+
+
+def _scd2_model(dim, snap, eff, now, dense):
+    """Reference SCD2 merge over plain tuples (key, nk, cc, attr, tz,
+    version, is_current, from, to, created, updated); `snap` maps the
+    natural key to its (attr, tz). Tracked attributes compare NULL-safe."""
+    high = dt.date(9999, 12, 31)
+    out = [r for r in dim if not r[6]]  # history passes through
+    inserts = []
+    current = {(r[1], r[2]): r for r in dim if r[6]}
+    for nk, r in current.items():
+        new = snap.get(nk)
+        if new is None or new == (r[3], r[4]):  # absent or unchanged: kept
+            out.append(r[:10] + (r[9],))
+        else:  # changed: expired, and version+1 inserted
+            out.append(r[:6] + (False, r[7], eff, r[9], now))
+            inserts.append((*nk, *new, r[5] + 1))
+    inserts += [(*nk, *new, 1) for nk, new in snap.items() if nk not in current]
+    top = max((r[0] for r in dim), default=0)
+    for i, (nk, cc, attr, tz, v) in enumerate(sorted(inserts, key=lambda t: t[:2])):
+        key = top + i + 1 if dense else None
+        out.append((key, nk, cc, attr, tz, v, True, eff, high, now, now))
+    return sorted(out, key=lambda r: (r[1], r[2], r[5]))
+
+
+@pytest.mark.parametrize("key_strategy", ["dense", "hash"])
+@pytest.mark.parametrize("seed", [0, 1, 2])
+def test_scd2_merge_matches_reference_model(spark, key_strategy, seed):
+    """One-pass SCD2 merge ≡ a plain-Python reference over random
+    snapshots: history rows, absent keys, new keys and NULL tracked
+    attributes (`<=>`), both key strategies, two merges deep (so the
+    second merge sees expired history). Dense keys continue from the
+    existing max in natural-key order; hash keys are xxhash64(natural
+    key, version)."""
+    import random
+
+    from weather_data_warehouse_aws_spark.operators.scd2 import (
+        scd2_initial_load,
+        scd2_merge,
+    )
+
+    rng = random.Random(seed)
+    attrs = [1.0, 2.0, None]
+    tzs = ["EST", "GMT", None]
+    keys = [(f"k{i}", rng.choice(["US", "GB"])) for i in range(rng.randint(3, 7))]
+    base = [(nk, cc, rng.choice(attrs), rng.choice(tzs)) for nk, cc in keys]
+    dim = scd2_initial_load(
+        spark.createDataFrame(base, _SCD2_SCHEMA), ["nk", "cc"], "key",
+        effective_date=dt.date(2024, 1, 1), now=dt.datetime(2024, 1, 1),
+        key_strategy=key_strategy,
+    )
+    model = dim.select(_SCD2_MODEL_COLS)
+    rows = [tuple(r) for r in model.collect()]
+    for step in range(2):
+        snap = {}
+        for nk, cc in keys:
+            if rng.random() < 0.75:
+                snap[(nk, cc)] = (rng.choice(attrs), rng.choice(tzs))
+        for j in range(rng.randint(0, 3)):
+            new_key = (f"n{step}{j}", rng.choice(["US", "GB"]))
+            keys.append(new_key)
+            snap[new_key] = (rng.choice(attrs), rng.choice(tzs))
+        eff, now = dt.date(2024, 2, 1 + step), dt.datetime(2024, 2, 1 + step, 7)
+        merged = scd2_merge(
+            spark.createDataFrame(rows, model.schema).select(dim.columns),
+            spark.createDataFrame(
+                [(*nk, *v) for nk, v in snap.items()], _SCD2_SCHEMA
+            ),
+            ["nk", "cc"], ["attr", "tz"], "key",
+            effective_date=eff, now=now, key_strategy=key_strategy,
+        )
+        assert merged.columns == dim.columns
+        got = sorted(
+            (tuple(r) for r in merged.select(_SCD2_MODEL_COLS).collect()),
+            key=lambda r: (r[1], r[2], r[5]),
+        )
+        want = _scd2_model(rows, snap, eff, now, key_strategy == "dense")
+        if key_strategy == "hash":
+            hashed = spark.createDataFrame(got, model.schema).select(
+                (F.col("key") == F.xxhash64("nk", "cc", "version")).alias("ok")
+            )
+            assert all(r.ok for r in hashed.collect())
+            got, want = [r[1:] for r in got], [r[1:] for r in want]
+        assert got == want
+        rows = [tuple(r) for r in merged.select(_SCD2_MODEL_COLS).collect()]
+
+
+def test_scd2_dense_keys_pinned(spark):
+    """The exact dense surrogate keys of a three-snapshot history. The
+    warehouse's accuracy hash leaves `location_key` out, so a re-keying
+    bug in the merge would show nowhere else. Values: the two-merge
+    output of the join-and-union merge this one-pass merge replaced."""
+    from weather_data_warehouse_aws_spark.operators.scd2 import (
+        scd2_initial_load,
+        scd2_merge,
+    )
+
+    base = [("a", "US", 1.0, "EST"), ("b", "US", 2.0, "EST"), ("c", "GB", 3.0, "GMT"),
+            ("d", "GB", 4.0, "GMT"), ("e", "IN", None, "IST"), ("f", "IN", 6.0, None)]
+    snaps = [
+        # b changed, c's attr to NULL, d absent, e unchanged NULL, new g, aa
+        [("a", "US", 1.0, "EST"), ("b", "US", 2.5, "EST"), ("c", "GB", None, "GMT"),
+         ("e", "IN", None, "IST"), ("f", "IN", 6.0, None), ("g", "JP", 7.0, "JST"),
+         ("aa", "US", 8.0, "EST")],
+        # b changed again, d back unchanged, f's NULL tz set, c back from
+        # NULL, new h
+        [("b", "US", 2.75, "EST"), ("d", "GB", 4.0, "GMT"), ("f", "IN", 6.0, "IST"),
+         ("c", "GB", 3.0, "GMT"), ("h", "BR", 9.0, "BRT")],
+    ]
+    dim = scd2_initial_load(
+        spark.createDataFrame(base, _SCD2_SCHEMA), ["nk", "cc"], "key",
+        effective_date=dt.date(2024, 1, 1), now=dt.datetime(2024, 1, 1),
+    )
+    for i, snap in enumerate(snaps):
+        dim = scd2_merge(
+            dim, spark.createDataFrame(snap, _SCD2_SCHEMA), ["nk", "cc"],
+            ["attr", "tz"], "key",
+            effective_date=dt.date(2024, 2, 1 + i), now=dt.datetime(2024, 2, 1 + i, 7),
+        )
+        dim = spark.createDataFrame(dim.collect(), dim.schema)
+    got = sorted(
+        (r.key, r.nk, r.version, r.is_current, str(r.effective_to_date))
+        for r in dim.collect()
+    )
+    assert got == [
+        (1, "a", 1, True, "9999-12-31"),
+        (2, "b", 1, False, "2024-02-01"),
+        (3, "c", 1, False, "2024-02-01"),
+        (4, "d", 1, True, "9999-12-31"),
+        (5, "e", 1, True, "9999-12-31"),
+        (6, "f", 1, False, "2024-02-02"),
+        (7, "aa", 1, True, "9999-12-31"),
+        (8, "b", 2, False, "2024-02-02"),
+        (9, "c", 2, False, "2024-02-02"),
+        (10, "g", 1, True, "9999-12-31"),
+        (11, "b", 3, True, "9999-12-31"),
+        (12, "c", 3, True, "9999-12-31"),
+        (13, "f", 2, True, "9999-12-31"),
+        (14, "h", 1, True, "9999-12-31"),
+    ]
+
+
 def test_split_by_hash_stable_under_repartitioning(spark, sf_dir):
     """The split label depends only on the id — identical under any
     physical layout (the leak-free-eval-set property)."""

@@ -8,6 +8,7 @@ invariants, band-join boundaries, and idempotent re-ingest.
 from __future__ import annotations
 
 import datetime as dt
+import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -420,13 +421,13 @@ def test_gold_tables_are_transactional_and_time_travelable(
     assert [h["op"] for h in tx_history(dim_path)].count("overwrite") == 2
 
     # SILVER is on the log too (round-7): the re-ingest swapped the same
-    # dates atomically (one replace_where commit), row count is unchanged,
-    # and silver time-travels to the pre-ingest version
+    # dates atomically (one replace_partitions commit), row count is
+    # unchanged, and silver time-travels to the pre-ingest version
     sv1 = tx_snapshot(cur_path)["version"]
     assert sv1 > sv0
     assert layers2["silver_current"].count() == sn0
     assert tx_read(spark, cur_path, version=sv0).count() == sn0
-    assert [h["op"] for h in tx_history(cur_path)].count("replace_where") == 2
+    assert [h["op"] for h in tx_history(cur_path)].count("replace_partitions") == 2
 
     # bad-load rollback: restore the fact to the pre-refresh version
     tx_restore(acc_path, v0)
@@ -809,3 +810,54 @@ def test_run_pipeline_from_scratch_history_with_both_offsets(spark, tmp_path_fac
     assert len({(r.location_name, r.country_code) for r in dim}) == len(CITIES)
     (sydney,) = [r for r in dim if r.location_name == SHIFTED_CITY]
     assert sydney.timezone_offset_seconds == SHIFTED_TZ
+
+
+# ------------------------------------------------------------ daily load
+#: Spark jobs in a warm daily load: silver 5 (dedup + write per table),
+#: dim_location 2 (one-pass SCD2 merge + write), dim_date 1, accuracy
+#: fact 7. The join-and-union merge and the aggregate-then-replaceWhere
+#: silver write this replaced took 29 on the benchmark warehouse.
+DAILY_LOAD_JOB_BUDGET = 15
+
+
+def test_warm_daily_load_job_budget(spark, bronze_dir, tmp_path_factory):
+    """A warm load (one new bronze day into a built warehouse, after a
+    first warm load) runs at most DAILY_LOAD_JOB_BUDGET Spark jobs,
+    counted under one job group by the status tracker."""
+    wh = str(tmp_path_factory.mktemp("wh_budget"))
+    run_pipeline(spark, bronze_dir, wh)
+    sc = spark.sparkContext
+    jobs = []
+    for i in range(2):
+        day = str(tmp_path_factory.mktemp(f"bronze_day{i}"))
+        generate_bronze(day, start=dt.date(2024, 1, 1) + dt.timedelta(days=DAYS + i),
+                        days=1, seed=100 + i)
+        group = f"daily-load-budget-{i}"
+        sc.setJobGroup(group, "warm daily load")
+        try:
+            run_pipeline(spark, day, wh)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        jobs.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+    assert jobs[-1] <= DAILY_LOAD_JOB_BUDGET, jobs
+
+
+def test_dim_date_spine_covers_the_data(spark, tmp_path_factory):
+    """Bronze days past the configured dim_date range (2026-12-31) still
+    reach the facts: the spine grows to the silver data's own dates, so
+    the facts' inner join to dim_date drops no row. The spine is
+    committed on every load, like every other manifest table."""
+    from weather_data_warehouse_aws_spark.operators.txlog import tx_history
+
+    bronze = str(tmp_path_factory.mktemp("bronze_year_end"))
+    generate_bronze(bronze, start=dt.date(2026, 12, 29), days=5, seed=11)
+    wh = str(tmp_path_factory.mktemp("wh_year_end"))
+    layers = run_pipeline(spark, bronze, wh)
+    assert layers["fact_weather_actual"].count() == layers["silver_current"].count()
+    assert layers["fact_weather_forecast"].count() == layers["silver_forecast"].count()
+    last_for = layers["silver_forecast"].agg(F.max("forecast_for_date")).first()[0]
+    span = layers["dim_date"].agg(F.min("full_date"), F.max("full_date")).first()
+    assert str(span[0]) == "2024-01-01" and span[1] == last_for > dt.date(2027, 1, 2)
+    run_pipeline(spark, bronze, wh)
+    assert len(tx_history(os.path.join(wh, "gold", "dim_date"))) == 2

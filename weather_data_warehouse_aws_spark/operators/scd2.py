@@ -15,13 +15,16 @@ implements the real merge:
   historical (already-expired) rows pass through untouched; keys absent from
   the snapshot remain current (the reference domain has no deletes).
 
-Scale: one full-outer shuffle join on the natural key + unions — no windows
-over the whole dim, no driver loops. Dimensions are usually broadcast-sized,
-but nothing here breaks if they aren't: the join partitions on the natural
-key. Surrogate keys: `hash` strategy (xxhash64 of natural key + version) is
-pure map-side and the 100 TB default; `dense` reproduces the reference's
-row_number-style compact keys and is guarded by `operators.keys.dense_key`'s
-size ceiling.
+Scale: one pass — the existing rows and the snapshot go into one tagged
+union, one window over the natural key pairs each row with its partner,
+and each input row yields at most one output row; no join, no union of
+filtered copies, no driver round-trip. Surrogate keys: `hash` strategy
+(xxhash64 of natural key + version) partitions the merge on the natural
+key, so nothing breaks past broadcast size — the 100 TB default. `dense`
+reproduces the reference's row_number-style compact keys; it needs a
+global order and the global max key, so the whole merge runs in one
+partition (the max folds into the plan as a window, and the union is
+coalesced so no window shuffles) — dimension-sized by contract.
 """
 
 from __future__ import annotations
@@ -91,7 +94,18 @@ def scd2_merge(
     `updates` must carry the natural key plus every non-SCD attribute column
     of `existing`. Returns the full new dimension with `existing`'s column
     order.
+
+    One pass: every existing row and every update row go into one tagged
+    union; a window over the natural key hands each row its partner (an
+    update row sees the key's current row, a current row sees the key's
+    update), and each input row then yields at most one output row —
+    history passes through, a current row is kept or expired, an update
+    row is inserted when its key is new or changed and dropped otherwise.
+    A NULL key component never matches (SQL join semantics): NULL-key
+    update rows and NULL-key existing rows fall in separate windows.
     """
+    if key_strategy not in ("dense", "hash"):
+        raise ValueError(f"unknown key_strategy: {key_strategy}")
     scd_cols = {
         key_col,
         "effective_from_date",
@@ -105,6 +119,9 @@ def scd2_merge(
     missing = [c for c in attr_cols if c not in updates.columns]
     if missing:
         raise ValueError(f"updates missing attribute columns: {missing}")
+    untracked = [t for t in tracked if t not in attr_cols]
+    if untracked:
+        raise ValueError(f"tracked columns are not attribute columns: {untracked}")
 
     # SQL snippets for the effective/now stamps: the whole merge plan is
     # built from parsed selectExpr strings (ONE py4j round-trip per
@@ -121,110 +138,85 @@ def scd2_merge(
         if now
         else "CAST(current_timestamp() AS TIMESTAMP)"
     )
-
-    current = existing.filter(F.col("is_current"))
-    history = existing.filter(~F.col("is_current"))
-
+    high = f"DATE'{HIGH_DATE}'"
     nk = [_qid(k) for k in natural_key]
-    cur = current.selectExpr(
-        *nk,
-        *[f"{_qid(c)} AS {_qid('c_' + c)}" for c in attr_cols],
-        f"{_qid(key_col)} AS c_key",
-        "effective_from_date AS c_from",
-        "version AS c_version",
-        "created_timestamp AS c_created",
-        "TRUE AS c_exists",
+    key = _qid(key_col)
+    dense = key_strategy == "dense"
+
+    tagged = existing.selectExpr("*", "FALSE AS __scd2_upd").unionByName(
+        updates.selectExpr(*nk, *[_qid(c) for c in attr_cols], "TRUE AS __scd2_upd"),
+        allowMissingColumns=True,
     )
-    # snapshot-uniqueness guard, folded into the plan: a duplicate natural
-    # key in `updates` would fan out the full_outer join — the expired row
-    # emitted twice and multiple simultaneous is_current rows sharing one
-    # surrogate key. The window shares the join's key partitioning, and
-    # `updates` is dim-sized, so the guard costs a sort, not a scan.
+    if dense:
+        # compact keys need a global order and the global max key, so the
+        # merge runs in ONE partition — dimension-sized by the strategy's
+        # contract — and every window below is satisfied without a shuffle
+        tagged = tagged.coalesce(1)
+
+    # partner windows: one per natural key, NULL-key rows split by side
+    null_key = " OR ".join(f"{k} IS NULL" for k in nk)
+    w = f"PARTITION BY {', '.join(nk)}, CASE WHEN {null_key} THEN __scd2_upd END"
+    attrs = "".join(f", 'a{i}', {_qid(c)}" for i, c in enumerate(attr_cols))
+    idx = {c: i for i, c in enumerate(attr_cols)}
+
+    def changed(partner: str) -> str:
+        return " OR ".join(
+            f"NOT ({_qid(t)} <=> {partner}.a{idx[t]})" for t in tracked
+        ) or "FALSE"
+
+    # snapshot-uniqueness guard, in the plan: a duplicate natural key in
+    # `updates` would insert two current rows for one key. It rides the
+    # filter below, so Catalyst cannot prune it away.
     nk_str = ", ".join(f"CAST({k} AS STRING)" for k in nk)
-    upd = updates.selectExpr(
-        *nk,
-        *[f"{_qid(c)} AS {_qid('u_' + c)}" for c in attr_cols],
-        f"""CASE WHEN count(1) OVER (PARTITION BY {", ".join(nk)}) > 1
-            THEN CAST(raise_error(concat(
-                'scd2_merge: updates snapshot has duplicate rows for natural key (',
-                concat_ws(', ', {nk_str}),
-                ') — dedup upstream (e.g. dedup_latest)')) AS BOOLEAN)
-            ELSE TRUE END AS u_exists""",
+    guard = f"""CAST(raise_error(concat(
+        'scd2_merge: updates snapshot has duplicate rows for natural key (',
+        concat_ws(', ', {nk_str}),
+        ') — dedup upstream (e.g. dedup_latest)')) AS BOOLEAN)"""
+    paired = tagged.selectExpr(
+        "*",
+        f"first(CASE WHEN NOT __scd2_upd AND is_current "
+        f"THEN named_struct('v', version{attrs}) END, TRUE) OVER ({w}) AS __scd2_c",
+        f"first(CASE WHEN __scd2_upd THEN named_struct('x', TRUE{attrs}) END, TRUE) "
+        f"OVER ({w}) AS __scd2_u",
+        f"count(CASE WHEN __scd2_upd THEN 1 END) OVER ({w}) AS __scd2_n",
+        *([f"coalesce(max({key}) OVER (), 0) AS __scd2_max"] if dense else []),
+    ).filter(
+        f"""CASE WHEN __scd2_n > 1 THEN {guard}
+            WHEN __scd2_upd THEN __scd2_c IS NULL OR {changed('__scd2_c')}
+            ELSE is_current IS NOT NULL END"""
     )
-    j = cur.join(upd, list(natural_key), "full_outer")
-
-    changed = F.expr(
-        " OR ".join(
-            f"NOT ({_qid('c_' + t)} <=> {_qid('u_' + t)})" for t in tracked
-        )
-        if tracked else "FALSE"
-    )
-    matched = F.col("c_exists").isNotNull() & F.col("u_exists").isNotNull()
-
-    def _current_row(df: DataFrame, *, expire: bool) -> DataFrame:
-        return df.selectExpr(
-            f"c_key AS {_qid(key_col)}",
-            *nk,
-            *[f"{_qid('c_' + c)} AS {_qid(c)}" for c in attr_cols],
-            "c_from AS effective_from_date",
-            (
-                f"{eff_sql} AS effective_to_date"
-                if expire
-                else f"DATE'{HIGH_DATE}' AS effective_to_date"
-            ),
-            f"{'FALSE' if expire else 'TRUE'} AS is_current",
-            "c_version AS version",
-            "c_created AS created_timestamp",
-            (
-                f"{now_sql} AS updated_timestamp"
-                if expire
-                else "c_created AS updated_timestamp"
-            ),
-        )
 
     # kept = unchanged matches PLUS current rows absent from the snapshot —
     # absent keys remain current (partial snapshots must not drop dimension
-    # rows; the reference domain has no deletes)
-    kept = _current_row(
-        j.filter(F.col("c_exists").isNotNull() & (F.col("u_exists").isNull() | ~changed)),
-        expire=False,
+    # rows; the reference domain has no deletes). Compact keys continue
+    # from the existing max in natural-key order.
+    expire = f"(__scd2_u IS NOT NULL AND ({changed('__scd2_u')}))"
+    version = "coalesce(__scd2_c.v, 0) + 1"
+    new_key = (
+        f"row_number() OVER (PARTITION BY __scd2_upd ORDER BY {', '.join(nk)})"
+        " + __scd2_max"
+        if dense
+        else f"xxhash64({', '.join(nk)}, {version})"
     )
-    expired = _current_row(j.filter(matched & changed), expire=True)
-
-    inserts = j.filter((matched & changed) | F.col("c_exists").isNull()).selectExpr(
-        *nk,
-        *[f"{_qid('u_' + c)} AS {_qid(c)}" for c in attr_cols],
-        "coalesce(c_version, 0) + 1 AS version",
-    )
-    if key_strategy == "hash":
-        inserts = inserts.withColumn(key_col, F.xxhash64(*natural_key, F.col("version")))
-    elif key_strategy == "dense":
-        # compact keys continue from the current max; dim-sized relations only
-        max_key = existing.agg(F.max(key_col)).collect()[0][0] or 0
-        w = Window.orderBy(*natural_key)
-        inserts = inserts.withColumn(key_col, F.row_number().over(w) + F.lit(max_key))
-    else:
-        raise ValueError(f"unknown key_strategy: {key_strategy}")
-
-    inserted = inserts.selectExpr(
-        _qid(key_col),
+    out = paired.selectExpr(
+        f"CASE WHEN __scd2_upd THEN {new_key} ELSE {key} END AS {key}",
         *nk,
         *[_qid(c) for c in attr_cols],
-        f"{eff_sql} AS effective_from_date",
-        f"DATE'{HIGH_DATE}' AS effective_to_date",
-        "TRUE AS is_current",
-        "version",
-        f"{now_sql} AS created_timestamp",
-        f"{now_sql} AS updated_timestamp",
+        f"CASE WHEN __scd2_upd THEN {eff_sql} ELSE effective_from_date END"
+        " AS effective_from_date",
+        f"""CASE WHEN __scd2_upd THEN {high}
+            WHEN NOT is_current THEN effective_to_date
+            WHEN {expire} THEN {eff_sql} ELSE {high} END AS effective_to_date""",
+        f"__scd2_upd OR (is_current AND NOT {expire}) AS is_current",
+        f"CASE WHEN __scd2_upd THEN {version} ELSE version END AS version",
+        f"CASE WHEN __scd2_upd THEN {now_sql} ELSE created_timestamp END"
+        " AS created_timestamp",
+        f"""CASE WHEN __scd2_upd THEN {now_sql}
+            WHEN NOT is_current THEN updated_timestamp
+            WHEN {expire} THEN {now_sql} ELSE created_timestamp END
+            AS updated_timestamp""",
     )
-
-    out_cols = existing.columns
-    return (
-        history.select(out_cols)
-        .unionByName(kept.select(out_cols))
-        .unionByName(expired.select(out_cols))
-        .unionByName(inserted.select(out_cols))
-    )
+    return out.select(existing.columns)
 
 
 def inferred_members(

@@ -3296,6 +3296,67 @@ def tx_replace_where(
     }
 
 
+def tx_replace_partitions(df: DataFrame, path: str, partition_col: str) -> dict:
+    """Replace exactly the partitions this write produces, in one commit —
+    Delta's dynamic partition overwrite, on the log. `df` is written
+    hive-partitioned by `partition_col`; the replaced values are read back
+    from the written files' own `col=value/` segments (the hive NULL
+    partition is None), and the commit removes every live file whose path
+    carries one of them. No scan decides the region and no tripwire checks
+    the payload: the region IS the payload's partitions.
+
+    The remove set is taken at COMMIT time, like `tx_overwrite`'s, so two
+    landings of one partition racing each other leave one copy (last
+    writer wins). A live file whose path does not carry the column (an
+    older partition-spec era) cannot be proven outside the region by its
+    path, so the commit refuses with ValueError rather than keep or drop
+    its rows silently: rewrite such files under the current spec first
+    (`tx_compact`), or replace by predicate with `tx_replace_where`.
+
+    An empty `df` writes no file and commits nothing. Returns {"version",
+    "rows", "partitions", "files_removed"}; `rows` is summed from the
+    commit's per-file footer stats, `partitions` are the replaced raw
+    values (sorted, None last)."""
+    snap0 = _replay(path)
+    pby = _resolve_partition_by(snap0, [partition_col], "replace_partitions")
+    rels, stats = _write_new_files(
+        _with_constraint_guard(df, snap0), path, partition_by=pby, snap=snap0,
+    )
+    if not rels:
+        return {"version": None, "rows": 0, "partitions": [], "files_removed": 0}
+    phys = ((snap0 or {}).get("column_map") or {}).get(partition_col, partition_col)
+    values = {_partition_values(r)[phys] for r in rels}
+    removed: list[str] = []
+
+    def _build(s):
+        live = (s or {}).get("files", [])
+        bare = [f for f in live if phys not in _partition_values(f)]
+        if bare:
+            raise ValueError(
+                f"tx_replace_partitions: {len(bare)} live file(s) (first: "
+                f"{bare[0]}) do not carry {partition_col!r} in their path — "
+                "their rows cannot be proven outside the replaced "
+                "partitions; rewrite them under the current spec "
+                "(tx_compact) or use tx_replace_where"
+            )
+        removed[:] = [f for f in live if _partition_values(f)[phys] in values]
+        meta = {"schema": _evolved_schema_json(s, df), "partition_by": pby}
+        return (rels, removed, meta)
+
+    try:
+        v = _commit(path, "replace_partitions", _build,
+                    validate_remove_live=False, stats=stats)
+    except Exception:
+        _drop_files(path, rels)  # never referenced — clean up
+        raise
+    return {
+        "version": v,
+        "rows": sum(stats[r]["rows"] for r in rels),
+        "partitions": sorted(values, key=lambda x: (x is None, x or "")),
+        "files_removed": len(removed),
+    }
+
+
 def _dv_stable(base_snap: dict, now_snap: dict | None, rels: list[str]) -> None:
     """Raise TxConflict if any of `rels` gained/lost deletion vectors
     since `base_snap` — a rewrite computed from the base would otherwise

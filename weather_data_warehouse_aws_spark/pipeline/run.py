@@ -13,9 +13,10 @@ race, the pre-refresh state stays time-travelable
 (`tx_read(..., version=v)`), and a bad load rolls back with `tx_restore`.
 This makes the reference's M4 class of bug (non-idempotent re-runs,
 `bronze_to_silver.py:114-117`) impossible by construction across the
-whole warehouse: silver re-ingest is a `tx_replace_where` swap of
-exactly the batch's dates (hive layout and date pruning unchanged —
-the log records `col=value/` relpaths), gold refresh is `tx_overwrite`.
+whole warehouse: silver re-ingest is a `tx_replace_partitions` swap of
+exactly the dates the batch wrote (hive layout and date pruning
+unchanged — the log records `col=value/` relpaths), gold refresh is
+`tx_overwrite`.
 
 Cross-table consistency: the gold tables commit to SEPARATE logs, so a
 reader arriving between commits could join the new `dim_location` to the
@@ -46,6 +47,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.txlog import (
+    _partition_values,
     get_data_store,
     tx_exists,
     tx_overwrite,
@@ -79,9 +81,8 @@ def run_pipeline(
     # swaps that day's rows in one commit; a crash mid-write leaves the
     # previous version live (see write_silver_tx)
     versions: dict[str, int] = {}
-    versions["silver_current"] = write_silver_tx(
-        batch_current, cur_path, "observation_date"
-    )["version"]
+    cur = write_silver_tx(batch_current, cur_path, "observation_date")
+    versions["silver_current"] = cur["version"]
     versions["silver_forecast"] = write_silver_tx(
         batch_forecast, fc_path, "forecast_created_date"
     )["version"]
@@ -103,14 +104,26 @@ def run_pipeline(
     # the SCD2 updates are THIS batch's locations (latest observation per
     # key, see distinct_locations) — the whole silver history would carry
     # every past attribute value of a key and trip scd2_merge's
-    # duplicate-key guard on the first tracked change
+    # duplicate-key guard on the first tracked change. The batch's rows
+    # are read back from the partitions the silver commit replaced: the
+    # same rows as `batch_current`, without parsing the bronze JSON and
+    # redoing its dedup shuffle a second time.
     dim_location = build_dim_location(
-        batch_current, existing, effective_date=effective_date, now=now
+        silver_current.filter(_in_partitions("observation_date", cur["partitions"])),
+        existing, effective_date=effective_date, now=now,
     )
     versions["dim_location"] = tx_overwrite(dim_location, dim_location_path)
     dim_location = tx_read(spark, dim_location_path, version=versions["dim_location"])
 
-    dim_date = build_dim_date(spark, *dim_date_range)
+    # the spine covers the configured range AND every date the silver
+    # tables hold: the facts inner-join dim_date, so a date outside the
+    # spine would silently drop its fact rows. Committed on every load
+    # (every manifest table advances one version per load).
+    dim_date = build_dim_date(spark, *_date_span(dim_date_range, [
+        (cur_path, versions["silver_current"], silver_current, "observation_date"),
+        (fc_path, versions["silver_forecast"], silver_forecast, "forecast_created_date"),
+        (fc_path, versions["silver_forecast"], silver_forecast, "forecast_for_date"),
+    ]))
     dim_date_path = os.path.join(warehouse_dir, "gold", "dim_date")
     versions["dim_date"] = tx_overwrite(dim_date, dim_date_path)
     dim_date = tx_read(spark, dim_date_path, version=versions["dim_date"])
@@ -152,6 +165,52 @@ def run_pipeline(
     }
     _record_generation(spark, warehouse_dir, published, layers)
     return layers
+
+
+def _in_partitions(col: str, values: list[str | None]):
+    """Filter selecting the raw hive partition values `values` of DATE
+    column `col` (None is the NULL partition) — a partition filter, so
+    the scan opens only those directories."""
+    days = [_dt.date.fromisoformat(v) for v in values if v is not None]
+    cond = F.col(col).isin(days) if days else F.lit(False)
+    return cond | F.col(col).isNull() if None in values else cond
+
+
+def _date_bounds(snap: dict, col: str) -> list[str] | None:
+    """ISO dates bounding DATE column `col` over one snapshot's live
+    files, read from metadata only: each file's own partition value when
+    its path carries `col`, its footer min/max otherwise (an all-NULL
+    file bounds nothing). None when some file proves neither."""
+    phys = (snap.get("column_map") or {}).get(col, col)
+    out: list[str] = []
+    for rel in snap["files"]:
+        pv = _partition_values(rel)
+        if phys in pv:
+            out += [pv[phys]] if pv[phys] is not None else []
+            continue
+        st = snap["stats"].get(rel) or {}
+        cs = st.get("cols", {}).get(phys)
+        if cs is not None and len(cs) > 3 and cs[0] is not None:
+            out += [cs[0], cs[1]]
+        elif cs is None or cs[2] is None or cs[2] != st.get("rows"):
+            return None
+    return out
+
+
+def _date_span(
+    default: tuple[str, str], sources: list[tuple[str, int | None, DataFrame, str]]
+) -> tuple[str, str]:
+    """`default` widened to every date of each (table path, version, frame,
+    DATE column) source. Bounds come from the log's metadata; a source
+    whose files lack them is aggregated instead (one Spark job)."""
+    dates = list(default)
+    for path, version, frame, col in sources:
+        bounds = _date_bounds(tx_snapshot(path, version), col)
+        if bounds is None:
+            row = frame.agg(F.min(col).cast("string"), F.max(col).cast("string")).first()
+            bounds = [d for d in row if d is not None]
+        dates += bounds
+    return min(dates), max(dates)
 
 
 SNAPSHOT_TABLES = {

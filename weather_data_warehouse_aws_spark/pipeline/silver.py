@@ -10,15 +10,15 @@ Same semantics, re-expressed Spark-first with explicit schemas:
 
 Scale decisions vs the reference:
 * explicit StructType read (no inference pass over 100 TB of JSON);
-* `dropDuplicates` keys are also the partition-sort keys so the exchange is
-  reused by the write;
+* `dropDuplicates` is one keyed exchange, and the write's
+  `repartition(date)` one more (one file per date);
 * the reference recomputes the whole plan for its post-write `.count()`
-  (`bronze_to_silver.py:114-119`) — writers here return counts from a single
-  cached evaluation;
+  (`bronze_to_silver.py:114-119`) — the writer here runs ONE pass (the
+  write) and reads the count from the written files' footers;
 * idempotence fix (SURVEY §2.11 M4): the reference appends while re-reading
   the FULL bronze glob every run, duplicating silver. `write_silver_tx`
-  replaces the batch's dates in one transaction-log commit, so
-  re-processing a day swaps that day atomically.
+  replaces the partitions its write produced in one transaction-log
+  commit, so re-processing a day swaps that day atomically.
 """
 
 from __future__ import annotations
@@ -165,11 +165,13 @@ def build_silver_forecast(bronze: DataFrame) -> DataFrame:
 
 def write_silver_tx(df: DataFrame, path: str, partition_col: str) -> dict:
     """Transactional silver write: atomically replace exactly the dates
-    present in this batch, as ONE `tx_replace_where` commit against the
-    table's transaction log. Returns `{"rows": n, "version": v}` —
-    callers that publish a snapshot manifest must record THIS commit's
-    version, not re-read the log (a concurrent writer's later commit
-    would otherwise leak into the manifest as a mixed generation).
+    present in this batch, as ONE `tx_replace_partitions` commit against
+    the table's transaction log. Returns its `{"version", "rows",
+    "partitions", "files_removed"}` — callers that publish a snapshot
+    manifest must record THIS commit's version, not re-read the log (a
+    concurrent writer's later commit would otherwise leak into the
+    manifest as a mixed generation). `partitions` are the replaced raw
+    partition values (ISO date strings; the NULL-date partition is None).
 
     This is the layer where the reference's M4 bug actually lives
     (`bronze_to_silver.py:114-117` appends while re-reading the full
@@ -181,44 +183,12 @@ def write_silver_tx(df: DataFrame, path: str, partition_col: str) -> dict:
     relpaths, so `tx_read` plans keep exact date pruning
     (PartitionFilters, dynamic partition pruning).
 
-    The batch's distinct dates are collected driver-side (bounded by
-    days-per-ingest, not data size) and the write is compacted to one
-    file per date — a day of this domain is KBs, and the log commit cost
-    is per FILE.
+    The write is the only pass over the batch: the dates come back from
+    the written files' partition paths and the row count from their
+    footers, so no aggregate runs ahead of it and no per-date literal
+    enters any plan. It is compacted to one file per date — a day of
+    this domain is KBs, and the log commit cost is per FILE.
     """
-    from ..operators.txlog import tx_replace_where
+    from ..operators.txlog import tx_replace_partitions
 
-    df = df.repartition(partition_col).persist()
-    try:
-        # ONE aggregate job yields the distinct dates AND the row count
-        # (this used to be a distinct-collect plus a separate count —
-        # two full passes over the cache where one grouped pass serves
-        # both; the write scan below is then the cache's second and
-        # final consumer)
-        per_date = df.groupBy(partition_col).count().collect()
-        dates = [r[0] for r in per_date]
-        if not dates:
-            return {"rows": 0, "version": None}
-        n = sum(r[1] for r in per_date)
-        non_null = sorted(d for d in dates if d is not None)
-        conds = []
-        if non_null:
-            lits = ", ".join(f"DATE'{d}'" for d in non_null)
-            conds.append(f"{partition_col} IN ({lits})")
-        if len(non_null) != len(dates):
-            conds.append(f"{partition_col} IS NULL")
-        # a NULL date defeats the IN-based skip proof (NULL ∉ IN-list is
-        # not proof the file has no NULL rows) — prune only when none
-        prune = (
-            [(partition_col, "in", non_null)]
-            if len(non_null) == len(dates)
-            else None
-        )
-        res = tx_replace_where(
-            df.sparkSession, path, df, " OR ".join(conds),
-            prune=prune, partition_by=[partition_col],
-        )
-        return {"rows": n, "version": res["version"]}
-    finally:
-        df.unpersist()
-
+    return tx_replace_partitions(df.repartition(partition_col), path, partition_col)
